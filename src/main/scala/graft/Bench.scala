@@ -91,7 +91,11 @@ object Bench {
       currentQuery = name
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => failed += name }
+      catch { case e: Throwable =>
+        val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+        System.err.println(s"[bench] $name failed: ${e.getClass.getName}: $msg")
+        failed += name
+      }
       times(name) = ((System.nanoTime() - t0) / 1e9) :: times.getOrElse(name, Nil)
     }
     currentQuery = null

@@ -85,8 +85,8 @@ object Ingest {
     "q51_reference_linked_view",
     (s, _) => {
       val lu = addIdColumn(
-        Gpkg.readLayer(s, "/root/reference/data/lu.gpkg", "lu").drop("fid"), "KETERANGAN")
-      val dim = readCsv(s, "/root/reference/data/lu.csv")
+        Gpkg.readLayer(s, graft.Reference.file("data/lu.gpkg"), "lu").drop("fid"), "KETERANGAN")
+      val dim = readCsv(s, graft.Reference.file("data/lu.csv"))
       lu.join(broadcast(dim), Seq("TEMA"))
         .select(col("id").as("ID"), col("TEMA"), col("LUSE"), col("KETERANGAN"),
           col("JENIS"), col("SUMBER"))

@@ -357,7 +357,9 @@ object Spatial {
     // 1-task PIP+partials job). Interleaved A/B said NO — q74 min
     // 2.02→2.35 s, med 5.14→5.88 (4 cycles × 2 reps): the full-width
     // exchange of the scenes rows costs more than the widened map stage
-    // saves, and the AQE-coalesced percentile stage stays the floor.
+    // saves. The floor was the one-task percentile PARTIAL aggregate: with
+    // ~4,400 composite keys it passed Spark's 128-key object-hash limit and
+    // external-sorted every later row. Sessions.build raises that limit.
     val joined = spatialJoin(sc.filter(geeMonthWindow(col("date"))),
       broadcast(parcelsGeo), "cell_lon", "cell_lat", "geom", b)
       .withColumn("ndvi", (col("sr_b5") - col("sr_b4")) / (col("sr_b5") + col("sr_b4")))

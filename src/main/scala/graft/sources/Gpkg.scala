@@ -247,7 +247,7 @@ object Gpkg {
   private val q49 = Q(
     "q49_gpkg_golden_area",
     (s, _) => {
-      val lu = readLayer(s, "/root/reference/data/lu.gpkg", "lu")
+      val lu = readLayer(s, graft.Reference.file("data/lu.gpkg"), "lu")
       lu.filter(graft.ops.Relational.asciiLower(col("KETERANGAN")).contains("mangrove"))
         .withColumn("geom3857",
           G.stTransform(col("geom"), col("geom_srid"), lit(Crs.WebMercator)))

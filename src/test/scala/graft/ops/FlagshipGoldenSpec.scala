@@ -22,11 +22,11 @@ class FlagshipGoldenSpec extends AnyFunSuite {
 
   private lazy val spark = Sessions.build("local[4]", 4)
 
-  private val goldenCsv = "/root/reference/results/summary_report.csv"
+  private def goldenCsv = graft.Reference.file("results/summary_report.csv")
   private val team = "Dinas Pertanahan dan Penataan Ruang Kota Balikpapan"
 
   private def luMangrove() =
-    graft.sources.Gpkg.readLayer(spark, "/root/reference/data/lu.gpkg", "lu")
+    graft.sources.Gpkg.readLayer(spark, graft.Reference.file("data/lu.gpkg"), "lu")
       .filter(Relational.asciiLower(col("KETERANGAN")).contains("mangrove"))
       .select(col("KETERANGAN").as("keterangan"), col("geom"), col("geom_srid"))
 

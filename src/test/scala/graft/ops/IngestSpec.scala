@@ -9,7 +9,7 @@ class IngestSpec extends AnyFunSuite {
   private lazy val spark = Sessions.build("local[4]", 4)
 
   test("csv scan infers the reference dim schema (1 row)") {
-    val dim = Ingest.readCsv(spark, "/root/reference/data/lu.csv")
+    val dim = Ingest.readCsv(spark, graft.Reference.file("data/lu.csv"))
     assert(dim.columns.toSeq === Seq("TEMA", "JENIS", "SUMBER"))
     assert(dim.count() === 1)
     assert(dim.collect().head.getString(0) === "Hutan")

@@ -1,7 +1,11 @@
 package graft.ops
 
 import graft.{Sessions, SparkEntry}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan shape assertions: the scale properties the engine
@@ -142,6 +146,40 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(scan.isDefined, "q43 should read scenes through the materialized year-partitioned layout")
     val nParts = scan.get.selectedPartitions.partitionCount
     assert(nParts == 1, s"2023 filter should keep exactly 1 of 6 year partitions, got $nParts")
+  }
+
+  /** Every node of an executed plan, through the final AQE plan and its
+    * query stages (TreeNode.collect stops at both). */
+  private def finalNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => finalNodes(a.executedPlan)
+    case q: QueryStageExec => q +: finalNodes(q.plan)
+    case other => other +: other.children.flatMap(finalNodes)
+  }
+
+  test("q68/q74 NDVI median composite: object aggregates never fall back to sort") {
+    // the one-task percentile partial holds 773 (cell, month) keys at
+    // sf0.001, past Spark's default 128-key object-hash limit. q74 runs
+    // the composite inside its builder (reportFrom's collect), so the
+    // plans come from a listener that sees every action.
+    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      for (q <- Seq("q68_ndvi_monthly_oracle", "q74_flagship_oracle"))
+        SparkEntry.queries(q)(spark, dir).collect()
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val aggs = plans.synchronized(plans.toList).flatMap(finalNodes)
+      .collect { case a: ObjectHashAggregateExec => a }
+    assert(aggs.exists(_.toString.contains("percentile")), "no percentile aggregate executed")
+    aggs.foreach { a =>
+      assert(a.metrics("numTasksFallBacked").value == 0,
+        s"sort-based fallback in ${a.simpleString(200)}")
+    }
   }
 
   test("IVF index is built once per input and reused across invocations") {

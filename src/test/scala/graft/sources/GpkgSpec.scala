@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class GpkgSpec extends AnyFunSuite {
 
   private lazy val spark = Sessions.build("local[4]", 4)
-  private val path = "/root/reference/data/lu.gpkg"
+  private def path = graft.Reference.file("data/lu.gpkg")
 
   test("sqlite reader: schema lists the lu layer") {
     val db = Sqlite.open(path)

@@ -20,7 +20,7 @@ contains a tainted symbol. `--run` then runs graft.Verify on exactly that
 query list at sf0.01 and hash-compares via tools/crosscheck.py; non-zero
 exit on any mismatch. NOT part of the shipped engine.
 """
-import os, re, subprocess, sys
+import os, re, subprocess, sys, tempfile
 
 SRC = os.path.join(os.path.dirname(__file__), "..", "src", "main", "scala")
 DEF_RE = re.compile(
@@ -183,7 +183,7 @@ def main():
     if not run or not qs:
         return 0
     sf = os.environ.get("GRAFT_GATE_SF", "/root/testdata/sf0.01")
-    out = "/tmp/changed_set_out"
+    out = os.path.join(tempfile.gettempdir(), "changed_set_out")
     subprocess.run(["rm", "-rf", out])
     tools = os.path.dirname(os.path.abspath(__file__))
     r = subprocess.run([os.path.join(tools, "run.sh"), "graft.Verify", sf, out,

@@ -14,13 +14,13 @@ import pandas as pd
 
 # one spill dir per RUN (not per PID): unique via mkdtemp so a recycled
 # PID never inherits a crashed run's leftovers, and removed at exit so
-# repeated big-fixture crosschecks don't accumulate stale dirs on /tmp
+# repeated big-fixture crosschecks don't accumulate stale dirs in $TMPDIR
 _SPILL_DIR = None
 
 def _spill_dir() -> str:
     global _SPILL_DIR
     if _SPILL_DIR is None:
-        _SPILL_DIR = tempfile.mkdtemp(prefix="duck_spill_", dir="/tmp")
+        _SPILL_DIR = tempfile.mkdtemp(prefix="duck_spill_")
         atexit.register(shutil.rmtree, _SPILL_DIR, ignore_errors=True)
     return _SPILL_DIR
 

@@ -27,12 +27,14 @@ tree), then run `--check` as the round's FINAL step — if any engine
 commit slipped in after a stamp, `--check` fails and `--delta` closes
 the gap without paying for a full skew re-run.
 """
-import json, os, subprocess, sys
+import json, os, subprocess, sys, tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TOOLS = os.path.join(REPO, "tools")
-SKEW = "/tmp/graft_skew"
+TMP = tempfile.gettempdir()  # $TMPDIR, else /tmp
+SKEW = os.path.join(TMP, "graft_skew")
 SKEW_ART = "CORRECTNESS_skew.json"
+SKEW_FIXTURE = "graft.tools.MakeSkew of sf0.1"
 
 
 def sh(args, **kw):
@@ -131,17 +133,17 @@ def delta():
     qs, _ = cs.consumers(seeds) if seeds else ([], [])
     if not qs:
         print("[round_artifacts] --delta: no consumer queries — re-stamping only")
-        stamp(manifest, SKEW_ART, fixture=SKEW, crosscheck_exit=0,
+        stamp(manifest, SKEW_ART, fixture=SKEW_FIXTURE, crosscheck_exit=0,
               delta_of=ref, delta_queries=[])
         return 0
     print(f"[round_artifacts] --delta queries ({len(qs)}): {' '.join(qs)}")
-    out = "/tmp/ver_skew_delta"
+    out = os.path.join(TMP, "ver_skew_delta")
     sh(["rm", "-rf", out])
     r = sh([os.path.join(TOOLS, "run.sh"), "graft.Verify", SKEW, out, ",".join(qs)])
     if r.returncode != 0:
         print("[round_artifacts] --delta: skew Verify FAILED")
         return 1
-    part = "/tmp/skew_delta.json"
+    part = os.path.join(TMP, "skew_delta.json")
     env = dict(os.environ, GRAFT_DUCK_MEM=os.environ.get("GRAFT_DUCK_MEM", "24GB"))
     # crosscheck sees the FULL oracle_sql.json but only the filtered
     # queries' parquet — its exit code counts every unfiltered query as
@@ -161,7 +163,7 @@ def delta():
     for q in qs:
         full[q] = rows[q]
     json.dump(dict(sorted(full.items())), open(art_path, "w"), indent=1)
-    stamp(manifest, SKEW_ART, fixture=SKEW, crosscheck_exit=0,
+    stamp(manifest, SKEW_ART, fixture=SKEW_FIXTURE, crosscheck_exit=0,
           delta_of=ref, delta_queries=qs)
     print(f"[round_artifacts] --delta: merged {len(qs)} rows, re-stamped at "
           f"{head_commit()[:9]}")
@@ -182,7 +184,7 @@ def main():
             "/root/testdata/sf0.1", SKEW])
     if r.returncode != 0:
         return 1
-    out = "/tmp/ver_skew"
+    out = os.path.join(TMP, "ver_skew")
     sh(["rm", "-rf", out])
     r = sh([os.path.join(TOOLS, "run.sh"), "graft.Verify", SKEW, out])
     if r.returncode != 0:
@@ -204,7 +206,7 @@ def main():
     law_rc = 0
     if need:
         print(f"[round_artifacts] skew law checks ({len(need)}): {' '.join(need)}")
-        chk = "/tmp/chk_skew.json"
+        chk = os.path.join(TMP, "chk_skew.json")
         law_rc = sh([sys.executable, os.path.join(TOOLS, "sf10_checks.py"),
                      SKEW, out, "--only", ",".join(need), "--json", chk]).returncode
         if os.path.exists(chk):
@@ -212,7 +214,7 @@ def main():
                 row["spark_rows"] = report.get(q, {}).get("spark_rows")
                 report[q] = row
         json.dump(dict(sorted(report.items())), open(art, "w"), indent=1)
-    stamp(manifest, SKEW_ART, fixture=SKEW, crosscheck_exit=r.returncode,
+    stamp(manifest, SKEW_ART, fixture=SKEW_FIXTURE, crosscheck_exit=r.returncode,
           law_exit=law_rc)
 
     # 2. optional sf1 changed-set refresh: only the queries whose builders
@@ -220,7 +222,7 @@ def main():
     # once-per-several-rounds cost; the changed set is the staleness risk)
     if "--sf1" in sys.argv:
         ref = sys.argv[sys.argv.index("--sf1") + 1]
-        env2 = dict(os.environ, GRAFT_GATE_SF="/tmp/sf1",
+        env2 = dict(os.environ, GRAFT_GATE_SF=os.path.join(TMP, "sf1"),
                     GRAFT_DUCK_MEM=os.environ.get("GRAFT_DUCK_MEM", "24GB"))
         r = sh([sys.executable, os.path.join(TOOLS, "changed_set.py"),
                 "--run", "--diff", ref], env=env2)
