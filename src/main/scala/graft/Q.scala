@@ -173,9 +173,8 @@ object Sessions {
       // 128. Measured at sf0.1 on 4 cores: the NDVI median composite's
       // one-task percentile partial holds ~4,400 (cell, month) keys, so
       // at 128 it external-sorted every later row on a string + double +
-      // double + timestamp key — 511 of 929 executor JFR samples sat in
-      // SortBasedAggregator's TimSort, and q68's 100k-row stage took
-      // 1.3–1.7 s (0.63 s in hash mode). Memory bound: a small percentile
+      // double + timestamp key, and q68's 100k-row scan+partial stage
+      // took 1.9 s (1.2 s in hash mode). Memory bound: a small percentile
       // buffer is a 64-slot OpenHashMap, ~1 KB, so 65,536 keys is ~64 MB
       // per running task (256 MB of a 2 GB heap at 4 cores). Above that
       // Spark's sort fallback still applies. SCALE.md has the per-query
