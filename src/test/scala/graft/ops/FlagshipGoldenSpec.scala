@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Sessions
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,6 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * OWN artifact (results/summary_report.csv), on the reference's own
   * lu.gpkg — previously the goldens were asserted piecewise (q49 the
   * 4.16 ha area, q74 the variance/argmax composition under an oracle).
+  * Only the byte-for-byte test reads the reference snapshot (lu.gpkg and
+  * summary_report.csv, under `graft.Reference`).
   *
   * Row 5's VALUE (variance 0.0121…) is the one cell that cannot be
   * recomputed offline: it is derived from the reference's live
@@ -17,6 +20,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * planted series of known sample variance, the emitted string is the
   * shortest-decimal repr of exactly that variance — the same formatting
   * (str(float)) the reference used to produce 0.012144720142159249.
+  *
+  * The variance and inference law tests run on the fixture's mangrove
+  * parcels (FIXTURES.md §A1, same (keterangan, geom, geom_srid) shape and
+  * srid as lu.gpkg): the rows they assert come from the planted series
+  * alone, while the geometry still drives the area path.
   */
 class FlagshipGoldenSpec extends AnyFunSuite {
 
@@ -25,10 +33,19 @@ class FlagshipGoldenSpec extends AnyFunSuite {
   private def goldenCsv = graft.Reference.file("results/summary_report.csv")
   private val team = "Dinas Pertanahan dan Penataan Ruang Kota Balikpapan"
 
-  private def luMangrove() =
-    graft.sources.Gpkg.readLayer(spark, graft.Reference.file("data/lu.gpkg"), "lu")
+  private def mangrove(parcels: DataFrame) =
+    parcels
       .filter(Relational.asciiLower(col("KETERANGAN")).contains("mangrove"))
       .select(col("KETERANGAN").as("keterangan"), col("geom"), col("geom_srid"))
+
+  private def luMangrove() =
+    mangrove(graft.sources.Gpkg.readLayer(spark, graft.Reference.file("data/lu.gpkg"), "lu"))
+
+  private lazy val fixtureMangrove = {
+    val m = mangrove(Spatial.parcels(spark, "/root/testdata/sf0.001"))
+    assert(m.count() > 0, "fixture too small: no mangrove parcel to exercise the area path")
+    m
+  }
 
   private def planted(values: Seq[Double]) = {
     import spark.implicits._
@@ -69,7 +86,7 @@ class FlagshipGoldenSpec extends AnyFunSuite {
     // actually computed (str(float) semantics), and that double must be
     // 0.01 to 1 ulp-ish
     val r = Spatial
-      .referenceReport(spark, luMangrove(), planted(Seq(0.4, 0.5, 0.6)), team)
+      .referenceReport(spark, fixtureMangrove, planted(Seq(0.4, 0.5, 0.6)), team)
       .collect().map(x => (x.getString(0), x.getString(1))).toMap
     val v = r("Variance of Highest Variation")
     assert(math.abs(v.toDouble - 0.01) < 1e-15, s"variance $v")
@@ -78,7 +95,7 @@ class FlagshipGoldenSpec extends AnyFunSuite {
 
   test("inference branches reproduce all three reference literals and the N/A fallbacks") {
     def inf(vals: Seq[Double]): String =
-      Spatial.referenceReport(spark, luMangrove(), planted(vals), team)
+      Spatial.referenceReport(spark, fixtureMangrove, planted(vals), team)
         .collect().map(x => (x.getString(0), x.getString(1))).toMap
         .apply("Inference on Variance")
     assert(inf(Seq(0.1, 0.12, 0.14)) ===
@@ -88,7 +105,7 @@ class FlagshipGoldenSpec extends AnyFunSuite {
     assert(inf(Seq(0.0, 1.6, 3.2)) ===
       "High variance observed, suggesting significant changes over time.")
     // n <= 1 → pandas var() None → 'N/A' row and 'N/A' inference
-    val na = Spatial.referenceReport(spark, luMangrove(), planted(Seq(0.5)), team)
+    val na = Spatial.referenceReport(spark, fixtureMangrove, planted(Seq(0.5)), team)
       .collect().map(x => (x.getString(0), x.getString(1))).toMap
     assert(na("Variance of Highest Variation") === "N/A")
     assert(na("Inference on Variance") === "N/A")
