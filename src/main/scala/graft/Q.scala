@@ -59,7 +59,7 @@ object T {
     * retried map tasks reproduce their row→partition assignment); a key
     * that is a pure function of the row needs no such sort — retries are
     * reproducible by construction (guide §2.5 "derive the synthetic key
-    * deterministically"). Measured (tools/SpreadAb, sf0.1, min of 4):
+    * deterministically"). Measured (OPTIMIZATION_r17.md, sf0.1, min of 4):
     * lineitem spread+noop 1.21→0.88 s, documents a wash (0.18 vs 0.17).
     * Every spread call site carries a high-cardinality id among its
     * non-string columns (doc_id / vec_id / event_id / lineitem keys), so
@@ -184,13 +184,13 @@ object Sessions {
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // Warm the session with one trivial action before handing it out.
-    // Measured (tools/Repro): in a COLD session, a union-with-filter plan
-    // (q205/q234's planted branch) written via coalesce(1).write dies
-    // inside Spark's UnionBase.rewriteConstraints with "key not found:
-    // embedding#1" — an exprId-sensitive constraint-rewrite quirk that any
-    // prior action makes unreachable. Centralized here so EVERY entrypoint
-    // (Verify, Bench, tests, REPL) gets the mitigation, not just the ones
-    // that remembered to add it. Costs ~ms on an already-warm session.
+    // Reproduced (this comment is the record): in a COLD session, a
+    // union-with-filter plan (q205/q234's planted branch) written via
+    // coalesce(1).write dies inside Spark's UnionBase.rewriteConstraints
+    // with "key not found: embedding#1" — an exprId-sensitive
+    // constraint-rewrite quirk that any prior action makes unreachable.
+    // Centralized here so EVERY entrypoint (Verify, Bench, tests, REPL)
+    // gets the mitigation, not just the ones that remembered to add it. Costs ~ms on an already-warm session.
     s.range(1000).selectExpr("sum(id)").collect()
     s
   }

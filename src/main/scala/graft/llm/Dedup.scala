@@ -73,9 +73,6 @@ object Dedup {
                element_at(ws, i + 3))))
          else array($c) end), 1)""")
 
-  /** dev-probe alias (tools.PpjoinProbe); same column as `shingles`. */
-  private[graft] def shinglesPub(c: String): Column = shingles(c)
-
   private val shingleExpr = shingles("text")
 
   def minhashSignatures(docs: DataFrame): DataFrame =
@@ -182,29 +179,23 @@ object Dedup {
       maxBucket: Int = MaxBucketSize): DataFrame =
     minhashPairsImpl(s, docs, maxBucket, requireBandAgreement = false)
 
-  /** dev-probe hook (tools.Parts101): the band-agreement pipeline form,
-    * so the candidate-count linearity claim is measurable headlessly. */
-  private[graft] def minhashPairsForPipeline(s: SparkSession, docs: DataFrame): DataFrame =
-    minhashPairsImpl(s, docs, MaxBucketSize, requireBandAgreement = true)
-
   /** [[minhashPairs]] with `requireBandAgreement = true` — the form the
     * dedup PIPELINE (q101/q132 via [[dedupFlags]]) consumes. The band
-    * key is a 4-min Horner fold mod p (p = 1000003, the oracle-replayable
-    * modulus), so two UNRELATED docs collide in a band with probability
-    * 1/p: candidate pairs from accidental fold collisions grow as
-    * 16·n²/2p — measured super-linear at the sf30 gate (q101 4.43× time
-    * for 3× rows; Parts101 localized it to the pairs stage), and every
-    * such pair pays the exact shingle verify. Requiring the band's
-    * UNFOLDED 4-min tuple to agree (one 4-long slice compare on the
-    * already-joined row — Broder/LSH's actual banding definition;
-    * the fold is only a key compression) kills the collision channel
-    * (agreement space p⁴) while keeping every true LSH candidate, so the
-    * pairs stage is linear in true near-dups again. NOT applied to q25,
-    * whose declared output is the folded-hash candidate set itself. A
-    * pair this filter drops reaches q101's output only if its exact
-    * jaccard ≥ threshold AND no band tuple-agrees (P ≈ (1−j⁴)¹⁶ · 16/p
-    * per pair, ≈3e-9 at j=0.8) — hash-identical on every gated fixture
-    * (sf0.001..sf30), disclosed in OPTIMIZATION_r17.md. */
+    * key is a 4-min Horner fold mod P = 2³¹−1 ([[bandsFromMins]]), so two
+    * UNRELATED docs collide in a band with probability ≈1/P: accidental
+    * fold collisions add ≈16·n²/2P candidate pairs (≈3.7e5 at 10 M
+    * docs), and every such pair pays the exact shingle verify. Requiring
+    * the band's UNFOLDED 4-min tuple to agree (one 4-long slice compare
+    * on the already-joined row — Broder/LSH's actual banding definition;
+    * the fold is only a key compression) closes that channel while
+    * keeping every true LSH candidate. At sf30 it removed 1.4% of the
+    * candidates; the sf30 gate's super-linear q101 was the stacked scale
+    * fixture, not the fold (OPTIMIZATION_r17.md, Change 6). NOT applied
+    * to q25, whose declared output is the folded-hash candidate set
+    * itself. A pair this filter drops reaches q101's output only if its
+    * exact jaccard ≥ threshold AND no band tuple-agrees (probability
+    * ≈ (1−j⁴)¹⁶ · 16/P per pair, ≈1.6e-12 at j=0.8) — hash-identical on
+    * every gated fixture (sf0.001..sf30). */
   private def minhashPairsImpl(s: SparkSession, docs: DataFrame,
       maxBucket: Int, requireBandAgreement: Boolean): DataFrame = {
     // md5 (not xxhash64) for the exact collapse since r14: same content-
@@ -2155,9 +2146,9 @@ object Dedup {
   private[graft] def dedupFlags(s: SparkSession, docs: DataFrame,
       threshold: Double): DataFrame = {
     // requireBandAgreement: the pipeline only consumes pairs at
-    // jaccard ≥ threshold, so the folded-hash collision candidates (the
-    // sf30 super-linear term) are pure verify cost here — see
-    // [[minhashPairsImpl]] for the recall argument
+    // jaccard ≥ threshold, so the folded-hash collision candidates are
+    // pure verify cost here — see [[minhashPairsImpl]] for their count
+    // and the recall argument
     val pairs = minhashPairsImpl(s, docs, MaxBucketSize,
         requireBandAgreement = true)
       .filter(col("jaccard") >= threshold)

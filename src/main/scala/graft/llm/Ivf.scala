@@ -1049,9 +1049,9 @@ object Ivf {
     }
   }
 
-  /** q193's operating point (the r8 IvfSweep winner) — shared with
-    * [[warmIndex]] so the bench setup phase can never warm a different
-    * artifact than the query trains. */
+  /** q193's operating point (the r8 sweep's winner, see q193) — shared
+    * with [[warmIndex]] so the bench setup phase can never warm a
+    * different artifact than the query trains. */
   val Q193Iters = 2
   val Q193Codes = 256
   val Q193Groups = 16
@@ -1063,7 +1063,7 @@ object Ivf {
 
   private val q193 = Q(
     "q193_ivfpq_search",
-    // operating point from the r8 nprobe/m sweep (tools/IvfSweep, sf0.01):
+    // operating point from the r8 nprobe/m sweep (sf0.01; IvfPqSpec pins it):
     // 16 groups × 256 Lloyd-trained codes at nprobe=8 → recall@10 0.66 vs
     // 0.28 for the r7 4×16 seed books (chance 0.02). 16-byte codes are
     // still 16× smaller than the 256-byte raw vectors; the r7 config's

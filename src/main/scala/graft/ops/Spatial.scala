@@ -800,14 +800,15 @@ object Spatial {
     * per-parcel corner pivot with bbox → covering-bucket explode →
     * bucket equi-join + padded bbox prefilter + 4 CCW half-plane tests
     * (transformed boxes stay convex; conformal transforms preserve
-    * winding). Boundary-flip margin, MEASURED not assumed: scene centers
-    * are exact rationals; cross-engine corner drift is 2.8e-14° max
-    * (tools/CornerDump vs the qt2 replay, 12.4k corners at sf0.1) while
-    * the min point-to-edge-line distance over every candidate pair is
-    * 1.1e-10° at sf1 / 1.6e-10° at sf0.1 / 2.3e-7° at the sf0.01 driver
-    * gate (tools/PipMargin) — ≥3 orders everywhere. The CTE chain
-    * ends in `jn(id, keterangan, mi, day, cell_lon, cell_lat, sr_b4,
-    * sr_b5)`; `filterSql` prunes the parcel side (e.g. mangrove ids). */
+    * winding). Boundary-flip margin, MEASURED not assumed (r13; this
+    * comment is the record): scene centers are exact rationals;
+    * cross-engine corner drift is 2.8e-14° max (engine corners vs the
+    * qt2 replay, 12.4k corners at sf0.1) while the min point-to-edge-line
+    * distance over every candidate pair is 1.1e-10° at sf1 / 1.6e-10° at
+    * sf0.1 / 2.3e-7° at the sf0.01 driver gate — ≥3 orders everywhere.
+    * The CTE chain ends in `jn(id, keterangan, mi, day, cell_lon,
+    * cell_lat, sr_b4, sr_b5)`; `filterSql` prunes the parcel side (e.g.
+    * mangrove ids). */
   private def scenesParcelJoinSql(filterSql: String): String = {
     val (grid, gridLast, cx, cy) = parcelGridSql
     val (xip, etap) = tmInverseSql("ux", "uy")

@@ -11,15 +11,6 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DecimalType, DoubleTy
   * oracle — proving batch/stream agreement on the same input. */
 object Streams {
 
-  /** Stateful-stream shuffle-partition override. A stateful streaming query
-    * commits EVERY state-store partition on EVERY micro-batch (a
-    * stream-stream join keeps 4 stores per partition), so the per-batch
-    * floor cost scales with `spark.sql.shuffle.partitions` regardless of
-    * data volume. These one-shot replays have a handful of micro-batches
-    * over modest key cardinality — 8 partitions cuts the fixed commit/IO
-    * cost 4× vs the session's batch-tuned 32 while staying parallel. A new
-    * checkpoint is created per run, so the partition count is free to
-    * differ from the batch session conf. */
   /** tmpfs checkpoint dirs not yet cleaned up — deleted by a JVM shutdown
     * hook so an abnormal exit (uncaught throw, SIGTERM) cannot leak RAM
     * on /dev/shm until reboot. */
@@ -48,17 +39,18 @@ object Streams {
     * (8, or 4 for the outer interval joins) were tuned at sf0.1, where
     * the fixed per-batch commit floor dominates and fewer stores win.
     * At sf10 the per-partition state WORK dominates instead: the r16
-    * interleaved StreamAb A/B (sf10, min of 2 reps) measured the four
-    * stream-stream interval joins at 28-35 s on their bases, 16-19 s at
-    * 16 partitions, and 18-21 s at 32 — so beyond 32 MB of staged
-    * source the count steps to 16, beyond 256 MB to 32 (the local core
-    * count; a real cluster raises the cap with its executor count).
+    * interleaved A/B (sf10, min of 2 reps; SCALE.md, "Round 16: the
+    * streaming state floor") measured the four stream-stream interval
+    * joins at 28-35 s on their bases, 16-19 s at 16 partitions, and
+    * 18-21 s at 32 — so beyond 32 MB of staged source the count steps
+    * to 16, beyond 256 MB to 32 (the local core count; a real cluster
+    * raises the cap with its executor count).
     * sf0.1 and sf1 sources sit under 32 MB, so bench-tuned bases are
     * untouched there. Sizes sum RECURSIVELY (r17): `File.length` on a
     * directory-style parquet dataset returns the ~4 KB dirent size, which
     * silently floored every deployment-shaped layout to the sf0.1-tuned
     * base — single-file fixtures are unchanged. */
-  private def stateParts(dir: String, base: Int): Int = {
+  private[streaming] def stateParts(dir: String, base: Int): Int = {
     def bytes(f: java.io.File): Long =
       if (f.isDirectory) Option(f.listFiles).map(_.map(bytes).sum).getOrElse(0L)
       else f.length
@@ -70,13 +62,18 @@ object Streams {
     else base
   }
 
-  private def withStatePartitions[A](s: SparkSession, n0: Int)(body: => A): A = {
-    // dev-only A/B override (tools/StreamAb): the per-batch state-commit
-    // floor scales with the partition count, so the count is a measured
-    // choice, not a constant of nature — production paths never set this
-    // (system property first so one JVM can interleave arms)
-    val n = sys.props.get("graft.state.parts").orElse(
-      sys.env.get("GRAFT_STATE_PARTS")).map(_.toInt).getOrElse(n0)
+  /** Runs `body` with the stateful-stream shuffle-partition count `n`. A
+    * stateful streaming query commits EVERY state-store partition on
+    * EVERY micro-batch (a stream-stream join keeps 4 stores per
+    * partition), so the per-batch floor cost scales with
+    * `spark.sql.shuffle.partitions` regardless of data volume. These
+    * one-shot replays have a handful of micro-batches over modest key
+    * cardinality — 8 partitions cuts the fixed commit/IO cost 4× vs the
+    * session's batch-tuned 32 while staying parallel. A new checkpoint is
+    * created per run, so the partition count is free to differ from the
+    * batch session conf; the session's partition, no-data-batch and
+    * checkpoint settings are restored afterwards. */
+  private def withStatePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
     val pKey = "spark.sql.shuffle.partitions"
     val nKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val cKey = "spark.sql.streaming.checkpointLocation"

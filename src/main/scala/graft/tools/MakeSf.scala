@@ -23,11 +23,12 @@ import org.apache.spark.sql.functions._
   * IDENTICAL minhash signatures (true shingle Jaccard still 0), and
   * every candidate-pair query goes super-linear BY FIXTURE CONSTRUCTION
   * — the r16 sf30 gate's q101 4.4× flag was exactly this artifact
-  * (PairsProbe: 499k of 522k natural sf30 candidates were cross-copy
-  * est=1.0/jaccard=0.0 pairs, ids exactly one stacked span apart). nation/region stay fixed (25/5-row
-  * broadcast dims). Document text is word-salted per copy (every token
-  * suffixed `c<k>`) so cross-copy Jaccard is 0 and dedup outputs scale
-  * linearly — ×10 verbatim text would plant 10-clone clusters and inflate
+  * (OPTIMIZATION_r17.md, Change 6: 499k of 522k natural sf30 candidates
+  * were cross-copy est=1.0/jaccard=0.0 pairs, ids exactly one stacked
+  * span apart). nation/region stay fixed (25/5-row broadcast dims).
+  * Document text is word-salted per copy (every token suffixed `c<k>`)
+  * so cross-copy Jaccard is 0 and dedup outputs scale linearly — ×10
+  * verbatim text would plant 10-clone clusters and inflate
   * every pair query quadratically by construction, hiding real
   * regressions. Embeddings get a tiny deterministic per-copy perturbation
   * so ANN top-k has no 10-way ties.

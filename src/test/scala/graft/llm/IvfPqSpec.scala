@@ -81,10 +81,10 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("recall@10 of q193's shipped operating point: trained 16x256 books, nprobe=8") {
-    // the r8 sweep (tools/IvfSweep): recall rises 0.28 → 0.66 moving from
-    // 4x16 seed books @ nprobe=4 to 16-group, 256-code, 2-Lloyd-iteration
-    // books @ nprobe=8 — and the r7 ceiling was PQ resolution, not
-    // routing (nprobe=16 on the old books reached only 0.32). Floor 0.55
+    // the r8 nprobe/m sweep (also cited at Ivf's q193): recall rises
+    // 0.28 → 0.66 moving from 4x16 seed books @ nprobe=4 to 16-group,
+    // 256-code, 2-Lloyd-iteration books @ nprobe=8 — and the r7 ceiling
+    // was PQ resolution, not routing (nprobe=16 on the old books reached only 0.32). Floor 0.55
     // leaves margin for FP-mean jitter in distributed Lloyd averaging;
     // chance is 0.02.
     val dir01 = "/root/testdata/sf0.01"
