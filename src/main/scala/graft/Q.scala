@@ -180,6 +180,15 @@ object Sessions {
       // Spark's sort fallback still applies. SCALE.md has the per-query
       // audit.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
+      // The `file:` scheme in both Hadoop APIs without child processes
+      // (graft/LocalFs.scala). Without libhadoop, Hadoop runs `chmod` per
+      // created file and directory and `readlink` twice per checkpoint
+      // rename: 2,512 process starts in one curation_ingest benchmark run,
+      // 14 with these two settings. On a 4-core VM, q73's state commit
+      // went 0.496 → 0.038 s per pass and the workload's median pass
+      // 2.31 → 1.91 s (SCALE.md).
+      .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NoForkLocalFs].getName)
     localDir.foreach(d => b.config("spark.local.dir", d))
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")

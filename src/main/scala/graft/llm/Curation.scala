@@ -191,22 +191,6 @@ object Curation {
       ORDER BY vec_id ASC NULLS FIRST"""),
     "SemDeDup: q120-kernel cluster assign, within-cluster integer-exact cosine-threshold drop (semantic-dedup surface)")
 
-  /** q146: bigram-LM continuation score — the perplexity proxy. Corpus
-    * bigram counts c(w1,w2) and head counts c(w1) = Σ_w2 c(w1,w2) give a
-    * per-occurrence continuation probability floor(10⁶·c2/c1); a doc's
-    * score is the sum over its bigram occurrences and avg_ppm the integer
-    * mean — degenerate repeated text scores near 10⁶, incoherent
-    * token-salad scores low, which is exactly the CCNet keep/drop axis,
-    * with every number exact (no log, no float).
-    *
-    * Scale shape: bigram extraction is MAP-SIDE — adjacent pairs come
-    * straight out of the token array (no per-doc window, no exchange
-    * before the first aggregate); the counts shuffle carries (w1, w2,
-    * partial) map-combined; the weight table is vocab²-bounded and
-    * broadcast (hash-bucket it at an open vocabulary, as in q144); the
-    * doc-score shuffle carries partial sums only. */
-  /** The q146 score frame — (doc_id, n_bigrams, score, avg_ppm), unsorted
-    * (q151 composes it; q146 adds the presentation sort). */
   /** Adjacent token pairs in ONE tight Scala pass. The Catalyst form
     * (filter HOF → transform(sequence) building 26.6 M structs) runs
     * interpreted — HigherOrderFunctions are CodegenFallback — and the
@@ -235,6 +219,8 @@ object Curation {
     }
   })
 
+  /** The q146 score frame — (doc_id, n_bigrams, score, avg_ppm), unsorted
+    * (q151 composes it; q146 adds the presentation sort). */
   def bigramScores(s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
       val bigrams = T(s, dir, "documents")
         .select(col("doc_id"), explode(bigramPairsUdf(col("text"))).as("b"))
@@ -258,6 +244,20 @@ object Curation {
           expr("score div n_bigrams").as("avg_ppm"))
   }
 
+  /** q146: bigram-LM continuation score — the perplexity proxy. Corpus
+    * bigram counts c(w1,w2) and head counts c(w1) = Σ_w2 c(w1,w2) give a
+    * per-occurrence continuation probability floor(10⁶·c2/c1); a doc's
+    * score is the sum over its bigram occurrences and avg_ppm the integer
+    * mean — degenerate repeated text scores near 10⁶, incoherent
+    * token-salad scores low, which is exactly the CCNet keep/drop axis,
+    * with every number exact (no log, no float).
+    *
+    * Scale shape: bigram extraction is MAP-SIDE — adjacent pairs come
+    * straight out of the token array (no per-doc window, no exchange
+    * before the first aggregate); the counts shuffle carries (w1, w2,
+    * partial) map-combined; the weight table is vocab²-bounded and
+    * broadcast (hash-bucket it at an open vocabulary, as in q144); the
+    * doc-score shuffle carries partial sums only. */
   private val q146 = Q(
     "q146_bigram_lm",
     (s, dir) => bigramScores(s, dir).orderBy(asc_nulls_first("doc_id")),

@@ -65,11 +65,14 @@ object Streams {
   /** Runs `body` with the stateful-stream shuffle-partition count `n`. A
     * stateful streaming query commits EVERY state-store partition on
     * EVERY micro-batch (a stream-stream join keeps 4 stores per
-    * partition), so the per-batch floor cost scales with
+    * partition), so the per-batch commit cost scales with
     * `spark.sql.shuffle.partitions` regardless of data volume. These
     * one-shot replays have a handful of micro-batches over modest key
-    * cardinality — 8 partitions cuts the fixed commit/IO cost 4× vs the
-    * session's batch-tuned 32 while staying parallel. A new checkpoint is
+    * cardinality. The bases (8, or 4 for the outer interval joins) were
+    * tuned at sf0.1 while every checkpoint file written also started
+    * Hadoop child processes (`chmod`, `readlink`; SCALE.md, "Hadoop's
+    * local file system without child processes"); they have not been
+    * re-tuned since graft/LocalFs.scala removed them. A new checkpoint is
     * created per run, so the partition count is free to differ from the
     * batch session conf; the session's partition, no-data-batch and
     * checkpoint settings are restored afterwards. */
@@ -80,13 +83,15 @@ object Streams {
     val oldP = s.conf.get(pKey)
     val oldN = s.conf.get(nKey)
     val oldC = s.conf.getOption(cKey)
-    // Checkpoint on tmpfs when available (r8 floor audit): these one-shot
-    // replays re-derive all state from the staged source on any restart,
-    // so checkpoint durability buys nothing — but EVERY micro-batch
-    // commit fsyncs offsets/commit markers per query, a fixed disk-bound
-    // floor paid by all ~12 streaming queries. A fresh /dev/shm dir per
-    // run (no cross-rep resume; deleted below) keeps the commit protocol
-    // identical while making the fsyncs RAM-speed. Production long-lived
+    // Checkpoint on tmpfs when available: these one-shot replays
+    // re-derive all state from the staged source on any restart, so
+    // checkpoint durability buys nothing. A fresh /dev/shm dir per run
+    // (no cross-rep resume; deleted below) keeps the commit protocol
+    // identical. The per-batch commit floor measured on a 4-core VM was
+    // not the checkpoint writes but Hadoop starting a `chmod` per
+    // checkpoint file and directory and two `readlink`s per rename;
+    // `Sessions.build` removes those (graft/LocalFs.scala), and q73's
+    // state commit went 0.496 → 0.038 s per pass. Production long-lived
     // streams put checkpoints on durable storage — that is a recovery
     // requirement, not part of the operator's cost model.
     val ckBase = {
