@@ -13,6 +13,13 @@ package graft
   * (`queries_median` — how a typical run feels under this VM's noise), and
   * explicit machine-readable totals for both. */
 object Bench {
+  /** `[bench] <what> failed: <Class>: <first message line>` on stderr —
+    * one format for warm-up, setup and measured-query failures. */
+  private def reportFailure(what: String, e: Throwable): Unit = {
+    val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+    System.err.println(s"[bench] $what failed: ${e.getClass.getName}: $msg")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -38,17 +45,16 @@ object Bench {
         "q101_dedup_pipeline", "q132_training_shards",
         "q156_pagerank", "q126_table_stats", "q151_curriculum_order"))
       try SparkEntry.queries(w)(spark, warmDir).count()
-      catch { case _: Throwable => () }
-    // Shared-ARTIFACT setup, timed separately (setup_sec + setup_steps in
+      catch { case e: Throwable => reportFailure(s"warm-up $w", e) }
+    // Shared-table setup, timed separately (setup_sec + setup_steps in
     // BENCH_DETAIL): work a deployment performs once at ingest/index time
-    // and serves from the catalog — the year-partitioned scenes archive
-    // (shared by q40/q43/q44/q45; 20.9 s vs 3.1 s warm for q45 at sf1
-    // when charged to whichever query touched it first), the bucketed
-    // orders/lineitem layout (q97/q118), the dedup cluster table
-    // (q82/q119, cross-session artifact), and the IVF index + trained PQ
-    // code table (q31/q193, cross-session codebook artifact). Charging
-    // these to the first toucher inflated that query's cold number and
-    // kept tripping scale audits; building them here makes rep-1 numbers
+    // — the year-partitioned scenes archive (shared by q40/q43/q44/q45;
+    // 20.9 s vs 3.1 s warm for q45 at sf1 when charged to whichever query
+    // touched it first), the bucketed orders/lineitem layout (q97/q118),
+    // q119's cluster table, and the IVF index + trained PQ code table
+    // (q31/q193). All are per-JVM memos this step warms. Charging them to
+    // the first toucher inflated that query's cold number and kept
+    // tripping scale audits; building them here makes rep-1 numbers
     // reflect query cost, with the build cost still reported honestly.
     val setupSteps = Seq[(String, () => Unit)](
       "scenes" -> (() => { graft.ops.Spatial.scenesTable(spark, sfDir).count(); () }),
@@ -57,7 +63,8 @@ object Bench {
       "ivf" -> (() => graft.llm.Ivf.warmIndex(spark, sfDir)))
     val setupTimes = setupSteps.map { case (n, f) =>
       val t0 = System.nanoTime()
-      val ok = try { f(); true } catch { case _: Throwable => false }
+      val ok = try { f(); true }
+        catch { case e: Throwable => reportFailure(s"setup $n", e); false }
       n -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
     }
     val setupSec = setupTimes.map(_._2).filter(_ >= 0).sum
@@ -91,11 +98,7 @@ object Bench {
       currentQuery = name
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case e: Throwable =>
-        val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
-        System.err.println(s"[bench] $name failed: ${e.getClass.getName}: $msg")
-        failed += name
-      }
+      catch { case e: Throwable => reportFailure(name, e); failed += name }
       times(name) = ((System.nanoTime() - t0) / 1e9) :: times.getOrElse(name, Nil)
     }
     currentQuery = null

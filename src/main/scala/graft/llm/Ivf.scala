@@ -119,12 +119,12 @@ object Ivf {
     * so repeated probes (bench reps, interactive sessions) skip the
     * centroid passes and the partitioned rewrite and pay only the pruned
     * probe scan. In-memory frames (no input files — the spec fixtures)
-    * are never cached; `rebuild = true` forces a fresh build. The index
-    * lives under [[graft.Scratch]] (per-JVM dir, removed at exit). */
+    * are never cached. The index lives under [[graft.Scratch]] (per-JVM
+    * dir, removed at exit). */
   private val indexCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Array[Array[Double]], String)]()
 
-  def builtIndex(emb: DataFrame, rebuild: Boolean = false): (Array[Array[Double]], String) = {
+  def builtIndex(emb: DataFrame): (Array[Array[Double]], String) = {
     val key = emb.inputFiles.sorted.mkString(";")
     def build(): (Array[Array[Double]], String) = {
       val cents = centroidArrays(emb)
@@ -134,7 +134,6 @@ object Ivf {
       (cents, path)
     }
     if (key.isEmpty) build()
-    else if (rebuild) { val b = build(); indexCache.put(key, b); b }
     else indexCache.computeIfAbsent(key, _ => build())
   }
 
@@ -834,68 +833,6 @@ object Ivf {
     books
   }
 
-  // ---- persisted codebook artifacts ---------------------------------
-  //
-  // Training is `iters` linear passes over the corpus — cheap relative to
-  // 100 TB but NOT free per process. A real deployment trains codebooks
-  // once and serves them as a catalog artifact (FAISS persists the
-  // quantizer next to the index for the same reason); retraining per JVM
-  // would re-scan the corpus on every fresh session. The artifact is a
-  // tiny parquet table (groups × codes rows of subDim doubles, ~256 KB at
-  // q193's 16×256×16) keyed by (corpus fingerprint, groups, codes,
-  // iters), so a corpus or parameter change trains a NEW artifact rather
-  // than silently serving stale codes. Doubles round-trip parquet
-  // bit-exactly, so reloaded books encode byte-identically
-  // (IvfPqSpec pins this).
-
-  /** Content fingerprint of the embedding table's backing files —
-    * [[graft.Artifacts.fingerprint]]. Detects both a different corpus
-    * and a regenerated fixture at the same path. */
-  def corpusFingerprint(emb: DataFrame): String = graft.Artifacts.fingerprint(emb)
-
-  /** Persist trained books as (g, c, vec) parquet — atomic via Spark's
-    * _SUCCESS marker (a torn write is retrained, never half-read). */
-  def saveBooks(s: SparkSession, books: Array[Array[Array[Double]]],
-      path: String): Unit = {
-    val rows = for {
-      g <- books.indices; c <- books(g).indices
-    } yield (g, c, books(g)(c).toSeq)
-    s.createDataFrame(rows).toDF("g", "c", "vec")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  /** Reload books written by [[saveBooks]] — bounded collect
-    * (groups × codes rows), reassembled in (g, c) order. */
-  def loadBooks(s: SparkSession, path: String): Array[Array[Array[Double]]] =
-    s.read.parquet(path).orderBy("g", "c").collect()
-      .groupBy(_.getInt(0)).toArray.sortBy(_._1)
-      .map(_._2.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray))
-
-  /** Trained books served from the cross-JVM artifact store: load if a
-    * complete artifact exists for this (corpus, groups, codes, iters)
-    * key, else train once and persist. In-memory frames (no input files
-    * — spec fixtures) always train fresh: they have no stable identity
-    * to key on. */
-  def pqBooksPersisted(emb: DataFrame, iters: Int, nCodes: Int = PqCodes,
-      groups: Int = PqGroups): Array[Array[Array[Double]]] = {
-    val f = corpusFingerprint(emb)
-    if (f.isEmpty) return pqBooksTrained(emb, iters, nCodes, groups)
-    val s = emb.sparkSession
-    val dir = new java.io.File(graft.Artifacts.root,
-      s"pqbooks_${f}_g${groups}_c${nCodes}_i$iters")
-    if (new java.io.File(dir, "_SUCCESS").isFile) loadBooks(s, dir.toString)
-    else {
-      // stage + atomic publish (Artifacts class doc): concurrent
-      // sessions race benignly instead of interleaving part files
-      val books = pqBooksTrained(emb, iters, nCodes, groups)
-      val stage = new java.io.File(graft.Artifacts.root,
-        s".stage_pqbooks_${f}_${java.util.UUID.randomUUID.toString.take(8)}")
-      saveBooks(s, books, stage.toString)
-      graft.Artifacts.publish(stage, dir)
-      books
-    }
-  }
-
   /** Pure per-vector encoder (spec entry point; the UDF delegates). The
     * books SHAPE is the parameterization: books.length groups of
     * books(g)(c).length-dim codewords — the constants above are only the
@@ -986,7 +923,7 @@ object Ivf {
       if (trainIters == 0 && nCodes == PqCodes && groups == PqGroups)
         pqCodesPath(s, emb)
       else pqCodesPath(s, emb, s"lloyd$trainIters-$nCodes-$groups",
-        pqBooksPersisted(_, trainIters, nCodes, groups))
+        pqBooksTrained(_, trainIters, nCodes, groups))
     val qvecs = vecsOf(emb).filter(col("vec_id") < 5)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val qside = qvecs
@@ -1051,7 +988,7 @@ object Ivf {
 
   /** q193's operating point (the r8 sweep's winner, see q193) — shared
     * with [[warmIndex]] so the bench setup phase can never warm a
-    * different artifact than the query trains. */
+    * different code table than the query trains. */
   val Q193Iters = 2
   val Q193Codes = 256
   val Q193Groups = 16
@@ -1075,14 +1012,15 @@ object Ivf {
     "IVF-PQ ANN with asymmetric distance + exact top-50 re-rank: nprobe routing, 16-byte trained codes, per-query LUT scoring, refined final ranks (FAISS IVFPQR shape); recall law spec-pinned")
 
   /** Bench setup hook: build the IVF index and the q193-config trained
-    * PQ code table (per-JVM memo + cross-session codebook artifact)
-    * before measured reps — both are serve-time index artifacts a
-    * deployment builds once at ingest, not per-query work. */
+    * PQ code table (both per-JVM memos; the books train once per JVM
+    * inside [[pqCodesPath]]'s cache) before measured reps — both are
+    * serve-time index structures a deployment builds once at ingest,
+    * not per-query work. */
   def warmIndex(s: SparkSession, dir: String): Unit = {
     val emb = T(s, dir, "embeddings")
     builtIndex(emb)
     pqCodesPath(s, emb, s"lloyd$Q193Iters-$Q193Codes-$Q193Groups",
-      pqBooksPersisted(_, Q193Iters, Q193Codes, Q193Groups))
+      pqBooksTrained(_, Q193Iters, Q193Codes, Q193Groups))
     ()
   }
 

@@ -22,14 +22,13 @@ import graft.{Sessions, SparkEntry}
   * sketches (KLL/CMS partials) legitimately depend on merge topology,
   * and their laws are spec-pinned instead.
   *
-  * KNOWN LIMITATION: queries backed by per-JVM memo caches or
-  * cross-session artifacts (scenes archive, bucketed tables, components
-  * labeling, IVF index, PQ code table) build those artifacts at the
-  * FIRST partition setting only — later settings read the same
-  * materialized table, so the matrix pins the artifact's downstream
+  * KNOWN LIMITATION: queries backed by per-JVM memos (scenes archive,
+  * bucketed tables, q119's cluster table, IVF index, PQ code table)
+  * build them at the FIRST partition setting only — later settings read
+  * the same materialized table, so the matrix pins the memo's downstream
   * consumption, not the build's own partition-sensitivity. The builds
   * are value-pinned separately: components/PQ codes through their
-  * oracle rows (q82/q119/q192) and recall/persist-identity specs.
+  * oracle rows (q82/q119/q192) and the IvfPqSpec recall specs.
   *
   * Usage: runMain graft.tools.DetMatrix [sfDir] [parts,csv] [only,csv]
   */

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft._
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Dev main: time named SparkEntry queries at a given sf dir.
   * Usage: tools/run.sh graft.tools.TimeQ <sfDir> <reps> q25_... q26_... */
@@ -14,7 +15,11 @@ object TimeQ {
     spark.range(1000).selectExpr("sum(id)").collect()
     for (r <- 1 to reps; n <- names) {
       val t0 = System.nanoTime()
-      val c = SparkEntry.queries(n)(spark, dir).count()
+      // full-column action: count() lets Catalyst prune every column the
+      // count does not read, so kernels that feed only output columns
+      // would never run; toRdd executes the query's whole projected plan
+      val qe = SparkEntry.queries(n)(spark, dir).queryExecution
+      val c = SQLExecution.withNewExecutionId(qe)(qe.toRdd.count())
       println(f"[timeq] rep$r $n: ${(System.nanoTime() - t0) / 1e9}%.2f s (rows=$c)")
       // drop this query's localCheckpoint blocks so a long multi-query
       // run doesn't accumulate tens of GB of dead cache (heap pressure +

@@ -144,37 +144,4 @@ class IvfPqSpec extends AnyFunSuite {
       .groupBy(col("qid")).agg(count(lit(1)).as("n")).collect()
     assert(ranks.forall(_.getLong(1) == 10L), "re-ranked output must keep 10 rows per query")
   }
-
-  test("persisted codebooks reload bit-identically and encode identically") {
-    val fresh = java.nio.file.Files
-      .createTempDirectory("graft_artifacts_spec_").toString
-    val prev = sys.props.get("graft.artifacts")
-    sys.props("graft.artifacts") = fresh
-    try {
-      val emb = T(spark, dir, "embeddings")
-      // first call trains AND persists; second must serve the artifact
-      val trained = Ivf.pqBooksPersisted(emb, iters = 1, nCodes = 8, groups = 4)
-      val arts = new java.io.File(fresh).listFiles()
-      assert(arts != null && arts.exists(_.getName.startsWith("pqbooks_")),
-        "first call did not persist a pqbooks artifact")
-      val reloaded = Ivf.pqBooksPersisted(emb, iters = 1, nCodes = 8, groups = 4)
-      // BIT-identical doubles (raw long bits, not ==): parquet must not
-      // have perturbed a single mantissa, else codes could flip on ties
-      for (g <- trained.indices; c <- trained(g).indices; d <- trained(g)(c).indices)
-        assert(java.lang.Double.doubleToRawLongBits(trained(g)(c)(d)) ==
-               java.lang.Double.doubleToRawLongBits(reloaded(g)(c)(d)),
-          s"book[$g][$c][$d] changed across persist/reload")
-      // and therefore identical codes for every vector
-      val t = trained.map(_.map(_.toSeq).toSeq).toSeq
-      val r = reloaded.map(_.map(_.toSeq).toSeq).toSeq
-      for ((id, v) <- vecs())
-        assert(Ivf.pqEncode(v.toSeq, t).sameElements(Ivf.pqEncode(v.toSeq, r)),
-          s"vec $id encodes differently under reloaded books")
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.artifacts") = v
-        case None => sys.props.remove("graft.artifacts"); ()
-      }
-    }
-  }
 }

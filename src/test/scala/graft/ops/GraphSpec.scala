@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraphSpec extends AnyFunSuite {
 
   private lazy val spark = Sessions.build("local[8]", 8)
+  private val dir = "/root/testdata/sf0.001"
 
   /** Independent reference: driver-side union-find. */
   private def unionFind(n: Int, edges: Seq[(Int, Int)]): Map[Long, Long] = {
@@ -59,11 +60,34 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("q82 components are the expected blocks of 10") {
-    val df = graft.SparkEntry.queries("q82_connected_components")(
-      spark, "/root/testdata/sf0.001")
+    val df = graft.SparkEntry.queries("q82_connected_components")(spark, dir)
     val rows = df.collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(rows.nonEmpty)
     rows.foreach { case (id, comp) => assert(comp === (id / 10) * 10) }
+  }
+
+  test("q119 split counts follow q82's components and survive an unpersist-all") {
+    def q119(): Map[String, (Long, Long)] =
+      graft.SparkEntry.queries("q119_leakage_safe_split")(spark, dir).collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    // the 80/10/10 block rule, recomputed from q82's collected components
+    def split(comp: Long): String = (comp / 10) % 10 match {
+      case b if b < 8 => "train"
+      case 8 => "val"
+      case _ => "test"
+    }
+    val comps = graft.SparkEntry.queries("q82_connected_components")(spark, dir)
+      .collect().map(r => r.getLong(1))
+    val want = comps.groupBy(split).map { case (sp, cs) =>
+      sp -> (cs.length.toLong, cs.distinct.length.toLong)
+    }
+    val first = q119()
+    assert(first.nonEmpty)
+    assert(first === want)
+    // TimeQ and JobProf drop every persistent RDD between queries; the
+    // memoized cluster table must outlive that
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    assert(q119() === first)
   }
 
   test("pageRank: regular graphs are a fixed point; path graph matches hand integers") {
