@@ -32,7 +32,7 @@ object T {
     * [[Sessions]]); convert here (ns → µs floor) so queries see a real
     * timestamp column. */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    Ts.norm(spark.read.parquet(s"$sfDir/$name.parquet"))
+    Ts.norm(Parquet.read(spark, s"$sfDir/$name.parquet"))
 
   /** Decouple COMPUTE parallelism from SCAN parallelism. A parquet file
     * only splits at row-group boundaries, so a small-bytes input is ONE
@@ -116,7 +116,7 @@ object Ts {
     * sentinel arithmetic (watermark-flush rows far in the future) is
     * written in, independent of the storage type. */
   def maxNanos(s: SparkSession, path: String): Long = {
-    val df = s.read.parquet(path)
+    val df = Parquet.read(s, path)
     df.schema.find(_.name == "ts").map(_.dataType) match {
       case Some(LongType) => df.agg(org.apache.spark.sql.functions.max(col("ts"))).head().getLong(0)
       case _ => df.agg(org.apache.spark.sql.functions.max(

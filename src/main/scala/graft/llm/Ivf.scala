@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Q, T}
+import graft.{Parquet, Q, T}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
@@ -112,7 +112,7 @@ object Ivf {
 
   /** Pruned probe-side read of a materialized index. */
   def readIndex(s: SparkSession, path: String, lists: Seq[Int]): DataFrame =
-    s.read.parquet(path).filter(col("list_id").isin(lists.map(Int.box): _*))
+    Parquet.read(s, path).filter(col("list_id").isin(lists.map(Int.box): _*))
 
   /** Per-JVM index cache keyed by the embedding table's input files: a
     * real engine builds an IVF index ONCE and serves many queries from it,
@@ -946,7 +946,7 @@ object Ivf {
       (qid, g, c, d)
     }
     val lut = s.createDataFrame(lutRows).toDF("qid", "g", "c", "lutd2")
-    val cand = s.read.parquet(codesPath)
+    val cand = Parquet.read(s, codesPath)
       .filter(col("list_id").isin(probed.map(Int.box): _*))
       .join(broadcast(qside.select(col("qid"), col("list_id"))), Seq("list_id"))
       .filter(col("qid") =!= col("vec_id"))

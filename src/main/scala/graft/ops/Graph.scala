@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, T}
+import graft.{Parquet, Q, T}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -128,7 +128,7 @@ object Graph {
       buildDocComponents(s, dir).write.mode(SaveMode.Overwrite).parquet(p)
       p
     })
-    s.read.parquet(path)
+    Parquet.read(s, path)
   }
 
   /** Bench setup hook: write q119's cluster table (per-JVM memo) before

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, T}
+import graft.{Parquet, Q, T}
 import graft.sources.Gpkg
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -225,12 +225,12 @@ object Ingest {
     (s, dir) => {
       val frag = graft.Scratch.dir(s"frag_events_${dir.hashCode.toHexString}")
       if (!java.nio.file.Files.exists(java.nio.file.Paths.get(frag, "_SUCCESS")))
-        s.read.parquet(s"$dir/events.parquet")
+        Parquet.read(s, s"$dir/events.parquet")
           .repartition(64).write.mode(SaveMode.Overwrite).parquet(frag)
       val out = graft.Scratch.dir(s"compact_events_${dir.hashCode.toHexString}")
-      compact(s.read.parquet(frag), 4, "ts")
+      compact(Parquet.read(s, frag), 4, "ts")
         .write.mode(SaveMode.Overwrite).parquet(out)
-      val compacted = s.read.parquet(out)
+      val compacted = Parquet.read(s, out)
         .transform(graft.Ts.norm)
       compacted
         .groupBy(hour(col("ts")).cast("long").as("hr"))
@@ -282,7 +282,7 @@ object Ingest {
           finally walk.close()
         }
       }
-      s.read.parquet(tbl)
+      Parquet.read(s, tbl)
         .groupBy(date_format(col("day"), "yyyy-MM-dd").as("day"))
         .agg(count(lit(1)).as("n_events"),
           sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
@@ -767,7 +767,7 @@ object Ingest {
     def publish(s: SparkSession, root: String, version: String, df: DataFrame): Boolean = {
       val stagePath = s"$root/$version"
       df.write.mode(SaveMode.Overwrite).parquet(stagePath)
-      val ok = audit(s.read.parquet(stagePath))
+      val ok = audit(Parquet.read(s, stagePath))
       if (ok) {
         val tmp = java.nio.file.Paths.get(root, s"_ptr_$version.tmp")
         java.nio.file.Files.write(tmp, version.getBytes("UTF-8"))
@@ -802,7 +802,7 @@ object Ingest {
           when(col("o_orderkey") % 97 === 0, lit(null)).otherwise(col("o_custkey")))
       val dirtyFull = dirty.unionByName(dirty.filter(col("o_orderkey") % 100 === 0))
       require(!Wap.publish(s, root, "v2", dirtyFull), "dirty v2 must be rejected")
-      s.read.parquet(s"$root/${Wap.resolve(root)}")
+      Parquet.read(s, s"$root/${Wap.resolve(root)}")
         .groupBy(col("o_orderpriority").as("priority"))
         .agg(count(lit(1)).as("n"),
           sum(col("o_totalprice").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_price"))
@@ -850,8 +850,8 @@ object Ingest {
           col("o_orderdate") < to_timestamp(lit("1998-07-01")))
         .select(date_format(col("o_orderdate"), "yyyy-MM").as("month"),
           (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast(LongType).as("cents"))
-      val hist = monthly(s.read.parquet(s"$root/v1").filter(col("o_year") === 1997))
-      val recent = monthly(s.read.parquet(s"$root/v2")
+      val hist = monthly(Parquet.read(s, s"$root/v1").filter(col("o_year") === 1997))
+      val recent = monthly(Parquet.read(s, s"$root/v2")
         .filter(col("o_month") >= "1998-01" && col("o_month") <= "1998-06"))
       hist.unionByName(recent)
         .groupBy(col("month"))
@@ -917,7 +917,7 @@ object Ingest {
         val futures = rewrites.map { src =>
           pool.submit(new Runnable {
             def run(): Unit =
-              s.read.parquet(s"$v1/source=$src")
+              Parquet.read(s, s"$v1/source=$src")
                 .filter(col("doc_id") % 97 =!= 0)
                 .write.mode(SaveMode.Overwrite)
                 .parquet(java.nio.file.Paths.get(v2, s"source=$src").toString)
@@ -938,7 +938,7 @@ object Ingest {
         if (firstFailure != null) throw firstFailure
       } finally pool.shutdown()
     }
-    s.read.option("basePath", v2).parquet(v2)
+    Parquet.read(s, v2)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
       .orderBy(asc_nulls_first("source"))
@@ -986,7 +986,7 @@ object Ingest {
         T(s, dir, "orders").filter(col("o_orderstatus") === "F")), "v2 publish")
       val current = Wap.resolve(root)
       vacuum(root, keep = current)
-      s.read.parquet(s"$root/$current")
+      Parquet.read(s, s"$root/$current")
         .groupBy(col("o_orderpriority").as("priority"))
         .agg(count(lit(1)).as("n"),
           sum(col("o_totalprice").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_price"))
@@ -1235,7 +1235,7 @@ object Ingest {
     val hot = monthly.filter(col("month") >= cutoff)
       .groupBy(col("month"))
       .agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("sum_cents"))
-    s.read.parquet(frozen).unionByName(hot)
+    Parquet.read(s, frozen).unionByName(hot)
       .orderBy(asc_nulls_first("month"))
   }
 

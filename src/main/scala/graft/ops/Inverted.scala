@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, T}
+import graft.{Parquet, Q, T}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -58,7 +58,7 @@ object Inverted {
     val buckets = s.createDataFrame(terms.map(Tuple1(_))).toDF("t")
       .select(pmod(xxhash64(col("t")), lit(NumBuckets)).cast("int"))
       .collect().map(_.getInt(0)).distinct.toSeq
-    s.read.parquet(path)
+    Parquet.read(s, path)
       .filter(col("bucket").isin(buckets: _*) && col("token").isin(terms: _*))
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("token")).as("n_terms"),

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Parquet
 import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -43,7 +44,7 @@ object Manifest {
   def zones(s: SparkSession, path: String, zoneCol: Column,
       cap: Int = MaxEntries): Array[(String, Long, Long)] =
     guarded(
-      s.read.parquet(path)
+      Parquet.read(s, path)
         .groupBy(col("_metadata.file_path").as("file"))
         .agg(min(zoneCol).as("lo"), max(zoneCol).as("hi")),
       s"file zones of $path", cap)
@@ -72,7 +73,7 @@ object Manifest {
   def partitionValues(s: SparkSession, path: String, partCol: Column,
       cap: Int = MaxEntries): Array[String] =
     guarded(
-      s.read.parquet(path).select(partCol.cast("string").as("v")).distinct(),
+      Parquet.read(s, path).select(partCol.cast("string").as("v")).distinct(),
       s"partition values of $path", cap)
       .map(_.getString(0))
 }

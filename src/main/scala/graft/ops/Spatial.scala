@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.Q
+import graft.{Parquet, Q}
 import graft.geo.{Crs, GeoFunctions => G}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -106,7 +106,7 @@ object Spatial {
     * every driver dir: events carries 1e6·sf rows), so an oracle can
     * rebuild the grid from the same parquet the engine reads. */
   private[ops] def scenesTargetRows(s: SparkSession, sfDir: String): Long = {
-    val nEvents = s.read.parquet(s"$sfDir/events.parquet").count()
+    val nEvents = Parquet.rowCount(s, s"$sfDir/events.parquet")
     math.max(7200L, 6L * nEvents)
   }
 
@@ -186,7 +186,7 @@ object Spatial {
         .write.partitionBy("yr").mode("overwrite").parquet(p)
       p
     })
-    s.read.parquet(path)
+    Parquet.read(s, path)
   }
 
   /** The reference's month-window quirk, replicated not fixed
@@ -235,10 +235,11 @@ object Spatial {
 
   /** Raster grid side length: ceil(sqrt(max(10k, 6·|events|))) — the one
     * size parameter both the engine and the DuckDB oracle must agree on,
-    * so it comes from the DATA (events row count: a metadata-only parquet
-    * count), never from parsing the dir name. */
+    * so it comes from the DATA (events row count, summed from the parquet
+    * footers on the driver: no Spark job, and the number DuckDB's
+    * `COUNT(*)` returns), never from parsing the dir name. */
   private[ops] def elevationNx(s: SparkSession, sfDir: String): Int = {
-    val nEvents = s.read.parquet(s"$sfDir/events.parquet").count()
+    val nEvents = Parquet.rowCount(s, s"$sfDir/events.parquet")
     math.ceil(math.sqrt(math.max(10000L, 6L * nEvents).toDouble)).toInt
   }
 
@@ -246,7 +247,7 @@ object Spatial {
     * convention as [[elevationNx]] (≡ the old 31·sf/0.001 on every
     * driver dir). */
   private[ops] def parcelCount(s: SparkSession, sfDir: String): Int = {
-    val nEvents = s.read.parquet(s"$sfDir/events.parquet").count()
+    val nEvents = Parquet.rowCount(s, s"$sfDir/events.parquet")
     math.max(31L, math.round(31.0 * nEvents / 1000.0)).toInt
   }
 

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, T}
+import graft.{Parquet, Q, T}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -146,7 +146,7 @@ object ZOrder {
       val zHi = mortonOf(319L, 575L)
       val zones = Manifest.zones(s, path, col("z"))
       val kept = Manifest.prune(zones, zLo, zHi)
-      s.read.parquet(kept.toIndexedSeq: _*)
+      Parquet.read(s, kept.toIndexedSeq: _*)
         .filter(col("px") >= 256 && col("px") < 320 &&
           col("py") >= 512 && col("py") < 576)
         .agg(count(lit(1)).as("n_points"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Q, T}
+import graft.{Parquet, Q, T}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -71,7 +71,7 @@ object ZoneMap {
       java.time.LocalDateTime.parse(t.replace(' ', 'T'))
         .toInstant(java.time.ZoneOffset.UTC).toEpochMilli * 1000L
     val files = prunedFiles(manifest(s, path), us(from), us(to))
-    s.read.parquet(files: _*)
+    Parquet.read(s, files: _*)
       .filter(col("o_orderdate").between(
         to_timestamp(lit(from)), to_timestamp(lit(to))))
       .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Q, T}
+import graft.{Parquet, Q, T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DecimalType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
@@ -135,7 +135,7 @@ object Streams {
     * events parquet and return the final (complete-mode) result. */
   def streamTumblingHour(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
     // raw schema (ts = long under nanosAsLong), NOT T()'s converted one
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = Parquet.read(s, s"$dir/events.parquet").schema
     // the file streaming source monitors a DIRECTORY; point it at sfDir
     // restricted to the events file
     val stream = s.readStream.schema(schema)
@@ -170,7 +170,7 @@ object Streams {
     * window (4× the tumbling count, still window-spine-sized, never
     * event-sized). Complete-mode memory sink holds aggregate rows only. */
   def streamHoppingWindow(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = Parquet.read(s, s"$dir/events.parquet").schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir)
@@ -247,7 +247,7 @@ object Streams {
   def statefulUserCounts(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = Parquet.read(s, s"$dir/events.parquet").schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .select(col("user_id"))
@@ -367,7 +367,7 @@ object Streams {
     * partition. */
   def streamIntervalJoin(s: SparkSession, dir: String,
       bucketHours: Int = 24): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = Parquet.read(s, s"$dir/events.parquet").schema
     def src = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .transform(graft.Ts.norm).withColumn("tss", date_trunc("second", col("ts")))
@@ -397,7 +397,7 @@ object Streams {
       }
       .start()
     try q.processAllAvailable() finally q.stop()
-    s.read.parquet(partialsDir)
+    Parquet.read(s, partialsDir)
       .groupBy(col("trade_id"))
       .agg(sum(col("n")).as("n_quotes"),
         sum(col("s")).cast(DoubleType).as("sum_qval"))
@@ -437,7 +437,7 @@ object Streams {
     * timestamp. */
   def streamDedup(s: SparkSession, dir: String,
       horizon: String = "1 hour"): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Parquet.read(s, s"$dir/documents.parquet").schema
     val outDir = graft.Scratch.fresh("dedup_out")
     val deduped = s.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
@@ -464,10 +464,10 @@ object Streams {
     // records — making the output identical under ANY input layout.
     // (distinct() guards the horizon edge: a duplicate arriving after
     // its predecessor's state expired is re-emitted by the operator.)
-    val canon = s.read.parquet(s"$dir/documents.parquet")
+    val canon = Parquet.read(s, s"$dir/documents.parquet")
       .select(col("doc_id"), md5(col("text").cast("binary")).as("hash"))
       .groupBy(col("hash")).agg(min(col("doc_id")).as("doc_id"))
-    s.read.parquet(outDir).select(col("hash")).distinct()
+    Parquet.read(s, outDir).select(col("hash")).distinct()
       .join(canon, Seq("hash"))
       .select(col("doc_id"), col("hash"))
       .orderBy(asc_nulls_first("doc_id"))
@@ -512,7 +512,7 @@ object Streams {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val gapUs = 1800L * 1000000L
     val src = s"$dir/events.parquet"
-    val schema = s.read.parquet(src).schema
+    val schema = Parquet.read(s, src).schema
     // staging dir: symlink the events file, sentinel file appended later
     val stage = java.nio.file.Paths.get(graft.Scratch.fresh("sess_stage"))
     java.nio.file.Files.createSymbolicLink(
@@ -545,7 +545,7 @@ object Streams {
       q.processAllAvailable()
       // sentinel file: one gap-breaking row per user closes the last session
       val maxTs = graft.Ts.maxNanos(s, src)
-      val sentinel = s.read.parquet(src).select(col("user_id")).distinct()
+      val sentinel = Parquet.read(s, src).select(col("user_id")).distinct()
         .select(schema.fields.map { f =>
           f.name match {
             case "user_id" => col("user_id")
@@ -599,7 +599,7 @@ object Streams {
       .join(broadcast(T(s, dir, "nation").select(col("n_nationkey"), col("n_name"))),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name"))
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = Parquet.read(s, s"$dir/events.parquet").schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .transform(graft.Ts.norm)
@@ -726,11 +726,11 @@ object Streams {
       // of days — the shape that makes the MV's partition-pruned merge
       // pay off (a randomly-shuffled stage makes every batch touch every
       // day, the pathological worst case for ANY incremental MV)
-      s.read.parquet(s"$dir/events.parquet")
+      Parquet.read(s, s"$dir/events.parquet")
         .repartitionByRange(8, col("ts"))
         .write.mode("overwrite").parquet(stage)
     val mvRoot = graft.Scratch.fresh("mv_state")
-    val schema = s.read.parquet(stage).schema
+    val schema = Parquet.read(s, stage).schema
     val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "2").parquet(stage)
       .transform(graft.Ts.norm)
@@ -1269,7 +1269,7 @@ object Streams {
   def streamLeftOuterJoin(s: SparkSession, dir: String,
       bucketHours: Int = 24): DataFrame = withStatePartitions(s, stateParts(dir, 4)) {
     val src0 = s"$dir/events.parquet"
-    val schema = s.read.parquet(src0).schema
+    val schema = Parquet.read(s, src0).schema
     val stage = java.nio.file.Paths.get(graft.Scratch.fresh("loj_stage"))
     java.nio.file.Files.createSymbolicLink(
       stage.resolve("events.parquet"), java.nio.file.Paths.get(src0))
@@ -1324,7 +1324,7 @@ object Streams {
         q.processAllAvailable()
       }
     } finally q.stop()
-    s.read.parquet(partialsDir)
+    Parquet.read(s, partialsDir)
       .filter(col("trade_id") >= 0)
       .groupBy(col("trade_id"))
       .agg(sum(col("n")).cast(LongType).as("n_quotes"),
@@ -1373,7 +1373,7 @@ object Streams {
   def streamFullOuterJoin(s: SparkSession, dir: String,
       bucketHours: Int = 24): DataFrame = withStatePartitions(s, stateParts(dir, 4)) {
     val src0 = s"$dir/events.parquet"
-    val schema = s.read.parquet(src0).schema
+    val schema = Parquet.read(s, src0).schema
     val stage = java.nio.file.Paths.get(graft.Scratch.fresh("foj_stage"))
     java.nio.file.Files.createSymbolicLink(
       stage.resolve("events.parquet"), java.nio.file.Paths.get(src0))
@@ -1433,7 +1433,7 @@ object Streams {
         q.processAllAvailable()
       }
     } finally q.stop()
-    val parts = s.read.parquet(pDir)
+    val parts = Parquet.read(s, pDir)
     val perTrade = parts.filter(col("trade_id").isNotNull)
       .groupBy(col("trade_id"))
       .agg(sum(col("n")).as("n"), sum(col("s")).as("s"))
@@ -1502,7 +1502,7 @@ object Streams {
     * along (q162's pattern) to expose the estimation error. */
   def streamKmvDistinct(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
     import graft.llm.Sketches
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = Parquet.read(s, s"$dir/events.parquet").schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir)

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft._
+import org.apache.spark.sql.execution.SQLExecution
 import scala.collection.mutable
 
 /** Dev-only per-JOB profiler (guide §1.1 empirical loop, headless): run one
@@ -43,7 +44,10 @@ object JobProf {
     for (r <- 1 to reps) {
       lock.synchronized(jobs.clear())
       val t0 = System.nanoTime()
-      val c = SparkEntry.queries(name)(spark, dir).count()
+      // full-column action, as in TimeQ: count() would let Catalyst prune
+      // the projected columns and with them the kernels that feed them
+      val qe = SparkEntry.queries(name)(spark, dir).queryExecution
+      val c = SQLExecution.withNewExecutionId(qe)(qe.toRdd.count())
       val wall = (System.nanoTime() - t0) / 1e9
       // listener bus is async (and its drain API is private[spark]):
       // poll until the observed job-end count is stable instead of a

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Parquet
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -42,7 +43,7 @@ object MakeSf {
     val copies = if (args.length > 2) args(2).toInt else 10
     val s = graft.Sessions.build(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]", 32)
 
-    def rd(t: String): DataFrame = s.read.parquet(s"$src/$t.parquet")
+    def rd(t: String): DataFrame = Parquet.read(s, s"$src/$t.parquet")
     def span(df: DataFrame, key: String): Long =
       df.agg(max(col(key))).head().getLong(0) + 1
 
@@ -64,7 +65,7 @@ object MakeSf {
       try walk.sorted(java.util.Comparator.reverseOrder())
         .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
       finally walk.close()
-      println(s"[makesf] $t: ${s.read.parquet(dest.toString).count()} rows")
+      println(s"[makesf] $t: ${Parquet.rowCount(s, dest.toString)} rows")
     }
 
     // replicate df with per-copy key shifts; extra transforms per copy

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Parquet
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,7 +34,7 @@ object MakeSkew {
     val out = if (args.length > 1) args(1) else "/tmp/graft_skew"
     val s = graft.Sessions.build(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]", 32)
 
-    def rd(t: String): DataFrame = s.read.parquet(s"$src/$t.parquet")
+    def rd(t: String): DataFrame = Parquet.read(s, s"$src/$t.parquet")
     def keyMax(df: DataFrame, key: String): Long =
       df.agg(max(col(key))).head().getLong(0)
 
@@ -50,7 +51,7 @@ object MakeSkew {
       try walk.sorted(java.util.Comparator.reverseOrder())
         .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
       finally walk.close()
-      println(s"[makeskew] $t: ${s.read.parquet(dest.toString).count()} rows")
+      println(s"[makeskew] $t: ${Parquet.rowCount(s, dest.toString)} rows")
     }
 
     /** Zipf-ish key in [1, kmax]: u⁵ power sampling off a hash of `idCol`. */

@@ -1,6 +1,13 @@
 #!/bin/bash
 # Direct JVM launcher for graft mains (no sbt runtime overhead).
 # Usage: tools/run.sh <mainClass> [args...]
+# Runs the classes of the checkout this script sits in:
+# <dir>/tools/run.sh puts <dir>/target/scala-2.13/classes on the classpath.
+CLASSES="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)/target/scala-2.13/classes"
+if [ ! -d "$CLASSES/graft" ]; then
+  echo "run.sh: no compiled graft classes under $CLASSES (run sbt compile)" >&2
+  exit 2
+fi
 MAIN=$1; shift
 ADDOPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
@@ -12,4 +19,4 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 exec java $ADDOPENS -Xmx${SPARK_DRIVER_MEM:-16g} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$MAIN" "$@"
+  -cp "$CLASSES:/opt/spark/jars/*" "$MAIN" "$@"

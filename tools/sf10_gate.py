@@ -24,7 +24,8 @@ Steps (each logged, each resumable by re-running):
 Run from the repo root. Uses a snapshot of target/scala-2.13/classes so
 a concurrent sbt compile can't swap class files under the JVMs.
 """
-import json, os, re, shutil, subprocess, sys, time
+import json, os, re, subprocess, sys, time
+from class_snapshot import snapshot_runner
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPOT_FILE = os.path.join(REPO, "tools", "sf10_spot.txt")
@@ -57,26 +58,13 @@ def sh(cmd, env=None, log=None):
     return rc
 
 
-def snapshot_classes():
-    src = os.path.join(REPO, "target/scala-2.13/classes")
-    dst = "/tmp/graft_cls_gate"
-    shutil.rmtree(dst, ignore_errors=True)
-    shutil.copytree(src, dst)
-    runner = "/tmp/run_gate.sh"
-    txt = open(os.path.join(REPO, "tools/run.sh")).read()
-    open(runner, "w").write(
-        txt.replace("/root/repo/target/scala-2.13/classes", dst))
-    os.chmod(runner, 0o755)
-    return runner
-
-
 def main():
     args = set(sys.argv[1:])
     sf1 = "/tmp/sf1"
     sf10 = "/tmp/sf10"
     out = "/tmp/ver_sf10_gate"
     log = "/tmp/sf10_gate.log"
-    run = snapshot_classes()
+    run = snapshot_runner("/tmp/graft_cls_gate")
     spot = open(SPOT_FILE).read().split()
     env32 = {"SPARK_DRIVER_MEM": "64g", "SPARK_GRAFT_CPUS": "32"}
 

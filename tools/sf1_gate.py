@@ -19,7 +19,8 @@ Exit non-zero if any row FAILS or asserts nothing.
 
 Usage: python3 tools/sf1_gate.py [--skip-verify] [--dirty-ok]
 """
-import json, os, shutil, subprocess, sys, time
+import json, os, subprocess, sys, time
+from class_snapshot import snapshot_runner
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TOOLS = os.path.join(REPO, "tools")
@@ -41,19 +42,6 @@ def sh(cmd, env=None, log=LOG):
     return rc
 
 
-def snapshot_classes():
-    src = os.path.join(REPO, "target/scala-2.13/classes")
-    dst = "/tmp/graft_cls_sf1gate"
-    shutil.rmtree(dst, ignore_errors=True)
-    shutil.copytree(src, dst)
-    runner = "/tmp/run_sf1gate.sh"
-    txt = open(os.path.join(REPO, "tools/run.sh")).read()
-    open(runner, "w").write(
-        txt.replace("/root/repo/target/scala-2.13/classes", dst))
-    os.chmod(runner, 0o755)
-    return runner
-
-
 def main():
     args = set(sys.argv[1:])
     sys.path.insert(0, TOOLS)
@@ -66,7 +54,7 @@ def main():
                   " — commit first or pass --dirty-ok\n" + dirty)
             return 2
 
-    run = snapshot_classes()
+    run = snapshot_runner("/tmp/graft_cls_sf1gate")
     env32 = {"SPARK_DRIVER_MEM": "64g", "SPARK_GRAFT_CPUS": "32"}
     if "--skip-verify" not in args:
         if sh(f"{run} graft.Verify {SF1} {OUT}", env32) != 0:

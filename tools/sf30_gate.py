@@ -26,7 +26,8 @@ Steps:
 Usage: python3 tools/sf30_gate.py [--skip-verify] [--skip-bench]
                                   [--sf30 /tmp/sf30]
 """
-import json, os, re, shutil, subprocess, sys, time
+import json, os, re, subprocess, sys, time
+from class_snapshot import snapshot_runner
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPOT = ["q101_dedup_pipeline", "q135_incremental_dedup", "q156_pagerank",
@@ -49,19 +50,6 @@ def sh(cmd, env=None, log=None):
     return rc
 
 
-def snapshot_classes():
-    src = os.path.join(REPO, "target/scala-2.13/classes")
-    dst = "/tmp/graft_cls_gate30"
-    shutil.rmtree(dst, ignore_errors=True)
-    shutil.copytree(src, dst)
-    runner = "/tmp/run_gate30.sh"
-    txt = open(os.path.join(REPO, "tools/run.sh")).read()
-    open(runner, "w").write(
-        txt.replace("/root/repo/target/scala-2.13/classes", dst))
-    os.chmod(runner, 0o755)
-    return runner
-
-
 def main():
     args = set(sys.argv[1:])
     sf30 = "/tmp/sf30"
@@ -70,7 +58,7 @@ def main():
             sf30 = a.split("=", 1)[1]
     out = "/tmp/ver_sf30_gate"
     log = "/tmp/sf30_gate.log"
-    run = snapshot_classes()
+    run = snapshot_runner("/tmp/graft_cls_gate30")
     env32 = {"SPARK_DRIVER_MEM": "64g", "SPARK_GRAFT_CPUS": "32"}
 
     if "--skip-verify" not in args:
