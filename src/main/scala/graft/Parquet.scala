@@ -44,13 +44,20 @@ object Parquet {
     * row-group row counts, the same number `read(...).count()` and
     * DuckDB's `COUNT(*)` return, with no Spark job. */
   def rowCount(spark: SparkSession, paths: String*): Long = {
+    val fs = files(spark, paths: _*)
+    if (fs.isEmpty) spark.read.parquet(paths: _*).count() else rowGroups(spark, fs)._2
+  }
+
+  /** The data files `read(spark, paths: _*)` scans. */
+  private[graft] def files(spark: SparkSession, paths: String*): Seq[FileStatus] =
+    dataFiles(spark.sessionState.newHadoopConf(), paths)
+
+  /** The number of row groups and of rows in the footers of `files`. */
+  private[graft] def rowGroups(spark: SparkSession, files: Seq[FileStatus]): (Int, Long) = {
     val conf = spark.sessionState.newHadoopConf()
-    val files = dataFiles(conf, paths)
-    if (files.isEmpty) spark.read.parquet(paths: _*).count()
-    else files.iterator.map { f =>
-      readFooter(conf, f, ParquetMetadataConverter.NO_FILTER)
-        .getBlocks.asScala.iterator.map(_.getRowCount).sum
-    }.sum
+    val blocks = files.flatMap(f =>
+      readFooter(conf, f, ParquetMetadataConverter.NO_FILTER).getBlocks.asScala)
+    (blocks.length, blocks.iterator.map(_.getRowCount).sum)
   }
 
   private def readFooter(conf: Configuration, f: FileStatus,

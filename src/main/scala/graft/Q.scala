@@ -25,59 +25,57 @@ final case class Q(
     doc: String = "")
 
 object T {
-  /** Scan one driver table (see TESTDATA.md / FIXTURES.md §B).
+  /** Scan one driver table (see TESTDATA.md / FIXTURES.md §B), through
+    * its per-JVM split copy where [[layout]] makes one.
     *
     * `events.ts` is parquet TIMESTAMP(NANOS), which Spark only reads as a
     * raw long under `spark.sql.legacy.parquet.nanosAsLong=true` (set in
     * [[Sessions]]); convert here (ns → µs floor) so queries see a real
     * timestamp column. */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    Ts.norm(Parquet.read(spark, s"$sfDir/$name.parquet"))
+    Ts.norm(Parquet.read(spark,
+      layout(spark, s"$sfDir/$name.parquet", spark.sparkContext.defaultParallelism)))
 
-  /** Decouple COMPUTE parallelism from SCAN parallelism. A parquet file
-    * only splits at row-group boundaries, so a small-bytes input is ONE
-    * scan task no matter how many cores exist — and a compute-dense
-    * operator downstream (per-row cosine fan-out, gram winnowing, JSON
-    * parse) then runs single-threaded. The sf1 rehearsal measured the
-    * damage on the driver's single-file layout: q147 62 s / q191 72 s /
-    * q127 31 s, all dominated by a 1-task stage (SCALE.md). This helper
-    * repartitions ONLY for few-file inputs — at 100 TB inputs arrive as
-    * thousands of files and it is a no-op, so the extra exchange is
-    * never paid where it would hurt. (The check is FILE count, not
-    * `rdd.getNumPartitions`: Spark's byte-range splitting reports ~32
-    * "partitions" for a single-row-group 123 MB file while exactly one
-    * of them carries the row group — partition count lies about work
-    * distribution, file count does not for this layout. A single
-    * multi-GB file would engage the spread too, which is the right call:
-    * that file IS a layout bug.) In-memory frames (no input files, spec
-    * fixtures) engage harmlessly.
-    *
-    * r17: hash-repartition on the frame's non-string scalar columns
-    * (ids/numerics/dates) instead of round-robin `repartition(n)`.
-    * Round-robin pays a full LOCAL SORT of the input first
-    * (spark.sql.execution.sortBeforeRepartition, on since SPARK-23207 so
-    * retried map tasks reproduce their row→partition assignment); a key
-    * that is a pure function of the row needs no such sort — retries are
-    * reproducible by construction (guide §2.5 "derive the synthetic key
-    * deterministically"). Measured (OPTIMIZATION_r17.md, sf0.1, min of 4):
-    * lineitem spread+noop 1.21→0.88 s, documents a wash (0.18 vs 0.17).
-    * Every spread call site carries a high-cardinality id among its
-    * non-string columns (doc_id / vec_id / event_id / lineitem keys), so
-    * murmur3 of those columns cannot skew; text payloads stay unhashed.
-    * Falls back to all columns when no scalar non-string column exists. */
-  def spread(spark: SparkSession, df: DataFrame): DataFrame =
-    if (df.inputFiles.length >= math.min(8, spark.sparkContext.defaultParallelism)) df
-    else {
-      import org.apache.spark.sql.functions.col
-      import org.apache.spark.sql.types._
-      val keyish = df.schema.fields.collect {
-        case f if f.dataType.isInstanceOf[NumericType] ||
-          f.dataType == DateType || f.dataType == TimestampType ||
-          f.dataType == TimestampNTZType || f.dataType == BooleanType => col(f.name)
+  private val splits = scala.collection.mutable.HashMap.empty[String, String]
+
+  /** The path to scan for the parquet table at `path` in a session of
+    * parallelism `k`. Spark splits parquet only at row-group boundaries,
+    * and a driver table is one file with one row group, so every scan of
+    * it, and every compute-dense operator fused into that scan stage
+    * (point-in-polygon join, NDVI, percentile partials, MinHash), runs as
+    * ONE task. A table whose footers hold fewer than `min(8, k)` row groups
+    * and at least `k` rows is rewritten once per JVM into `k` files of
+    * consecutive rows under [[Scratch]], in one single-task pass, and
+    * every later scan reads that copy: one task per core, no exchange.
+    * Any other table is read in place, as the many-file inputs of a real
+    * cluster always are; one in at least `min(8, k)` files is, without a
+    * footer read. The memo key is the path, each data file's length and
+    * mtime, and `k`; the copy's directory is named by a digest of the
+    * whole key, so a rewritten source or another `k` gets its own copy
+    * and never empties an earlier one. DuckDB and the file-streaming
+    * sources read the original file. Measured at sf0.1 on a 4-core VM
+    * (SCALE.md): q53's and q68's `events` stages 202 → 83 ms and 359 →
+    * 148 ms; the split of all ten tables costs 2.1–2.3 s once per JVM. */
+  private[graft] def layout(spark: SparkSession, path: String, k: Int): String = {
+    val files = Parquet.files(spark, path)
+    val key = (s"$path k=$k" +: files.map(f =>
+      s"${f.getPath} ${f.getLen} ${f.getModificationTime}")).mkString("\n")
+    splits.synchronized(splits.getOrElseUpdate(key, {
+      val wide = math.min(8, k)
+      lazy val (groups, rows) = Parquet.rowGroups(spark, files)
+      if (files.length >= wide || groups >= wide || rows < k) path
+      else {
+        val digest = java.security.MessageDigest.getInstance("SHA-256")
+          .digest(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        val dir = s"${Scratch.dir("table_split")}/${new java.io.File(path).getName}_" +
+          digest.take(10).map(b => f"$b%02x").mkString
+        Parquet.read(spark, path).coalesce(1).write
+          .option("maxRecordsPerFile", (rows + k - 1) / k)
+          .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir)
+        dir
       }
-      val keys = if (keyish.nonEmpty) keyish.toSeq else df.columns.toSeq.map(col)
-      df.repartition(spark.sparkContext.defaultParallelism, keys: _*)
-    }
+    }))
+  }
 }
 
 /** Central session tuning shared by Verify / Bench / tests. local[N] is a

@@ -319,7 +319,7 @@ object Curation {
       // HALF_UP, what round(col, 4) compiles to), and the heap admission
       // test `raw > worst − 1e-4` is lossless since rounding moves a
       // value by ≤ 5·10⁻⁵ + ulps.
-      val e = T.spread(s, T(s, dir, "embeddings"))
+      val e = T(s, dir, "embeddings")
         .select(col("vec_id"), col("label").cast("int").as("label"),
           col("embedding").cast(ArrayType(DoubleType)).as("v"))
       // anchor collect is n/10-sized and capped LOUDLY (Manifest's rule):
@@ -436,7 +436,7 @@ object Curation {
   private val q149 = Q(
     "q149_source_overlap",
     (s, dir) => {
-      val grouped = T.spread(s, T(s, dir, "documents"))
+      val grouped = T(s, dir, "documents")
         .select(col("source"), expr("filter(split(text, ' '), x -> x <> '')").as("ws"))
         .select(col("source"), explode(expr(
           "CASE WHEN size(ws) >= 3 THEN transform(sequence(2, size(ws) - 1), " +

@@ -253,7 +253,7 @@ object Dedup {
     * down the object (the q77 init-order lesson). */
   private lazy val q25 = Q(
     "q25_minhash_pairs",
-    (s, dir) => minhashPairs(s, T.spread(s, T(s, dir, "documents"))),
+    (s, dir) => minhashPairs(s, T(s, dir, "documents")),
     Some(q25OracleSql),
     "MinHash-LSH candidate pairs + exact n-gram Jaccard verify (dedup surface); mod-p kernel hash-gated")
 
@@ -462,7 +462,7 @@ object Dedup {
 
   private lazy val q26 = Q(
     "q26_simhash_pairs",
-    (s, dir) => simhashPairs(T.spread(s, T(s, dir, "documents"))),
+    (s, dir) => simhashPairs(T(s, dir, "documents")),
     Some(q26OracleSql),
     "SimHash chunk-bucketed near-dup pairs (dedup surface); 60-bit two-Horner fingerprint hash-gated")
 
@@ -546,11 +546,11 @@ object Dedup {
     * multi-table LSH (≈74% recall per table config at cos 0.9), verified
     * exactly. */
   def embeddingNearDups(s: SparkSession, emb: DataFrame, threshold: Double): DataFrame = {
-    // T.spread: the LSH key UDF (L·12 plane dots per row) is compute-dense
-    // and a single-file fixture is one scan task — measured single-threaded
-    // through key-gen AND the bucket checkpoint write at sf10 without it
-    val vecs = graft.T.spread(s, emb.select(col("vec_id"),
-      col("embedding").cast(ArrayType(DoubleType)).as("v")))
+    // the LSH key UDF (L·12 plane dots per row) is compute-dense: a
+    // one-task scan ran key-gen AND the bucket checkpoint write
+    // single-threaded at sf10; T's split copy scans in one task per core
+    val vecs = emb.select(col("vec_id"),
+      col("embedding").cast(ArrayType(DoubleType)).as("v"))
     // candidate ids only through the bucket self-join + dedup shuffle;
     // vectors are re-joined for surviving pairs afterwards
     // materialized once — feeds both self-join sides (see collapseExact)
@@ -638,9 +638,9 @@ object Dedup {
 
   def annTopK(s: SparkSession, emb: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // T.spread: same single-file/compute-dense reason as embeddingNearDups
-    val vecs = graft.T.spread(s, emb.select(col("vec_id"),
-      col("embedding").cast(ArrayType(DoubleType)).as("v")))
+    // compute-dense like embeddingNearDups: needs T's one-task-per-core scan
+    val vecs = emb.select(col("vec_id"),
+      col("embedding").cast(ArrayType(DoubleType)).as("v"))
     val bits = bitsFor(vecs.count())
     val bucketed = lshBuckets(vecs, "v")
     // r15 multi-probe: the adaptive bit schedule keeps the candidate
@@ -975,7 +975,7 @@ object Dedup {
 
   private val q206 = Q(
     "q206_minhash_oracle",
-    (s, dir) => minhashPairsExact(s, T.spread(s, T(s, dir, "documents"))),
+    (s, dir) => minhashPairsExact(s, T(s, dir, "documents")),
     Some(q206OracleSql),
     "integer-exact MinHash-LSH twin: q25's shingle->seeded-mins->band-bucket-join->verify pipeline in mod-p arithmetic DuckDB replays; banding decisions and exact (inter, uni) both hash-gated")
 
@@ -1146,7 +1146,7 @@ object Dedup {
 
   private val q208 = Q(
     "q208_dedup_pipeline_oracle",
-    (s, dir) => dedupPipelineExact(s, T.spread(s, T(s, dir, "documents"))),
+    (s, dir) => dedupPipelineExact(s, T(s, dir, "documents")),
     Some(q208OracleSql),
     "dedup pipeline capstone twin: q206 mod-p pairs -> integer Jaccard>=0.7 edges -> q82 components -> canonical keep flags, the whole chain hash-gated")
 
@@ -1336,7 +1336,7 @@ object Dedup {
   private val q210 = Q(
     "q210_incremental_dedup_oracle",
     (s, dir) => {
-      val corpus = T.spread(s, T(s, dir, "documents")).select(col("doc_id"), col("text"))
+      val corpus = T(s, dir, "documents").select(col("doc_id"), col("text"))
       incrementalDedupExact(s, corpus, plantedDelta(corpus))
     },
     Some(q210OracleSql),
@@ -1426,7 +1426,7 @@ object Dedup {
 
   private val q207 = Q(
     "q207_simhash_oracle",
-    (s, dir) => simhashPairsExact(s, T.spread(s, T(s, dir, "documents"))),
+    (s, dir) => simhashPairsExact(s, T(s, dir, "documents")),
     Some(q207OracleSql),
     "integer-exact SimHash twin: 30-bit mod-p fingerprint vote, 3x10-bit chunk buckets, pigeonhole-complete ham<=2 pairs — bucketing and hamming verify both hash-gated")
 
@@ -1828,7 +1828,7 @@ object Dedup {
 
   private lazy val q92 = Q(
     "q92_winnow_containment",
-    (s, dir) => excerptContainment(T.spread(s, T(s, dir, "documents"))),
+    (s, dir) => excerptContainment(T(s, dir, "documents")),
     Some(q92OracleSql),
     "winnowing-fingerprint containment: excerpt probes recover their source docs (SWA 2003 local guarantee); Karp-Rabin selection hash-gated")
 
@@ -1905,7 +1905,7 @@ object Dedup {
 
   private val q93 = Q(
     "q93_kgram_containment",
-    (s, dir) => kgramContainment(T.spread(s, T(s, dir, "documents"))),
+    (s, dir) => kgramContainment(T(s, dir, "documents")),
     Some(s"""WITH probes AS (
         SELECT doc_id + ${spanOffSql(0)} AS probe_id, substr(text, 11, 240) AS text
         FROM documents WHERE doc_id % 50 = 0),
@@ -2054,7 +2054,7 @@ object Dedup {
 
   private val q215 = Q(
     "q215_winnow_selection_oracle",
-    (s, dir) => winnowContainmentExact(T.spread(s, T(s, dir, "documents"))),
+    (s, dir) => winnowContainmentExact(T(s, dir, "documents")),
     Some(s"""WITH probes AS (
         SELECT doc_id + ${spanOffSql(0)} AS probe_id, substr(text, 11, 240) AS text
         FROM documents WHERE doc_id % 50 = 0),
@@ -2192,9 +2192,9 @@ object Dedup {
   private lazy val q101 = Q(
     "q101_dedup_pipeline",
     (s, dir) => {
-      // T.spread: the minhash signature UDF downstream is compute-dense
-      // and the single-file scan is one task without it
-      val base = T.spread(s, T(s, dir, "documents")).select(col("doc_id"), col("text"))
+      // the minhash signature UDF downstream is compute-dense; T's split
+      // copy scans in one task per core (T.layout)
+      val base = T(s, dir, "documents").select(col("doc_id"), col("text"))
       val span = spanFrame(base)
       val near = base.filter(col("doc_id") % 25 === 0).crossJoin(span)
         .select((col("doc_id") + lit(2L) * col("_span")).as("doc_id"),
@@ -2403,7 +2403,7 @@ object Dedup {
       // consumers (df counts, doc aggregation, prefix selection) would
       // otherwise each re-run the shingle explode over the text scan
       // (measured 11 s → 6 s warm at sf0.1)
-      val sh = T.spread(s, T(s, dir, "documents"))
+      val sh = T(s, dir, "documents")
         .select(col("doc_id"), explode(shingles("text")).as("sg"))
         .select(col("doc_id"), xxhash64(col("sg")).as("sgh"))
         .localCheckpoint(false) // lazy since r16: the df count materializes it

@@ -184,10 +184,10 @@ object Ivf {
     * shifts a row and breaks the hash. Scale shape (r13): assignment and
     * scoring are map-side in a per-partition kernel against broadcast
     * per-list probe groups; the one exchange carries per-probe heap
-    * survivors, never (probe, candidate) pairs. The input is T.spread: a
-    * single-file fixture is ONE row group = one scan task, and the whole
-    * kernel would otherwise run single-threaded — measured 21.9 s at sf1
-    * before the spread. */
+    * survivors, never (probe, candidate) pairs. The input is read through T:
+    * a single-row-group file is one scan task, and the whole kernel ran
+    * single-threaded on it — measured 21.9 s at sf1 — so T scans its
+    * one-file-per-core split copy (T.layout). */
   /** L2² distance between two int vectors (driver/kernel side). */
   private def l2sq(a: Array[Long], b: Array[Long]): Long = {
     var s = 0L; var i = 0
@@ -199,11 +199,10 @@ object Ivf {
   def ivfRoutingExact(emb: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sess = emb.sparkSession
-    val spreadEmb = graft.T.spread(sess, emb)
     val cents: Array[Array[Long]] = Array.tabulate(NumLists)(j =>
       Array.tabulate(64)(d =>
         (((j.toLong * 64 + d + 1) * 2654435761L) % 2147483647L) % 2001L - 1000L))
-    val iv = spreadEmb.select(col("vec_id"),
+    val iv = emb.select(col("vec_id"),
       expr("transform(sequence(1, 64), i -> cast(floor(coalesce(try_element_at(cast(embedding as array<double>), i), 0d) * 1000d) AS bigint))").as("v"))
     // r13: the r12 shape joined every assigned vector to every probe of
     // its list and shuffled one row per (probe, candidate) pair into the
@@ -361,13 +360,12 @@ object Ivf {
     * per-list probe LUTs), candidates come ONLY from probed lists, and
     * the one exchange carries per-probe top-5 heap survivors — never
     * (probe, candidate) pair rows, and never vectors. The input is
-    * T.spread for the q218 reason: single-file fixtures made the whole
-    * kernel ONE task — measured 111 s at sf1 in the r11 join shape
-    * before the spread. */
+    * read through T for the q218 reason: a single-row-group file made the
+    * whole kernel ONE task — measured 111 s at sf1 in the r11 join shape —
+    * so T scans its one-file-per-core split copy (T.layout). */
   def ivfPqAdcExact(emb: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sess = emb.sparkSession
-    val spreadEmb = graft.T.spread(sess, emb)
     val cents: Array[Array[Long]] = Array.tabulate(NumLists)(j =>
       Array.tabulate(64)(d =>
         (((j.toLong * 64 + d + 1) * 2654435761L) % 2147483647L) % 2001L - 1000L))
@@ -379,7 +377,7 @@ object Ivf {
       while (d < 16) { val t = v(g * 16 + d) - books(g)(c)(d); s += t * t; d += 1 }
       s
     }
-    val iv = spreadEmb.select(col("vec_id"),
+    val iv = emb.select(col("vec_id"),
       expr("transform(sequence(1, 64), i -> cast(floor(coalesce(try_element_at(cast(embedding as array<double>), i), 0d) * 1000d) AS bigint))").as("v"))
     // r13: same surgery as ivfRoutingExact — the probe equi-join +
     // window shuffled one row per (probe, candidate) pair (413 s at

@@ -246,7 +246,7 @@ object Multimodal {
     * pipeline's dedup stage sees it. */
   def imageTable(s: SparkSession, dir: String): Dataset[MediaRow] = {
     import s.implicits._
-    T.spread(s, T(s, dir, "documents").select(col("doc_id"), col("text")))
+    T(s, dir, "documents").select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .map { case (id, text) =>
         MediaRow(id, "img", Codecs.wrapBmp(text.getBytes("UTF-8"), 16))

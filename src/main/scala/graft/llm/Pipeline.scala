@@ -183,7 +183,7 @@ object Pipeline {
 
   private val q209 = Q(
     "q209_training_shards_oracle",
-    (s, dir) => trainingShardsExact(s, graft.T.spread(s, T(s, dir, "documents"))),
+    (s, dir) => trainingShardsExact(s, T(s, dir, "documents")),
     Some(q209OracleSql),
     "training-shards capstone twin: q208 mod-p dedup -> component-keyed split -> q106 packing CTE -> q112 order replay, the corpus-to-shards path end-to-end under the hash gate")
 

@@ -269,8 +269,8 @@ object Analytics {
       // frame is tiny but quadratic-in-cells when the vocabulary grows
       // with the corpus (sf10: 160 k cells → 10⁹ brand-block pairs, two
       // AQE-coalesced tasks). The repartition keeps this compute-dense
-      // probe side at full width (T.spread's reason: the frame is small,
-      // the work per pair is not).
+      // probe side at full width (the frame is small, the work per pair
+      // is not).
       val ca = cells.select(col("p_brand"), col("p_name").as("name_a"),
         col("cv").as("cv_a"), col("len").as("len_a"))
         .withColumn("jlen", explode(array((-2 to 2).map(d => col("len_a") + lit(d)): _*)))

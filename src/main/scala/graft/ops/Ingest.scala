@@ -114,7 +114,7 @@ object Ingest {
     "q88_orc_roundtrip",
     (s, dir) => {
       val tmp = orcScratch
-      T.spread(s, T(s, dir, "lineitem"))
+      T(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
           col("l_quantity"), col("l_extendedprice"),
           date_format(col("l_shipdate"), "yyyy-MM-dd").as("ship_day"))
@@ -343,12 +343,11 @@ object Ingest {
   private val q126 = Q(
     "q126_table_stats",
     (s, dir) => {
-      // T.spread of the 3-column projection: the multi-distinct agg
-      // EXPANDs every row 4× and partial-aggregates in the scan stage —
-      // a 3-task 1.6 s job on the single-file fixture (JobProf r17);
-      // no-op on many-file layouts where scan parallelism is already there
-      val l = T.spread(s, T(s, dir, "lineitem")
-        .select(col("l_quantity"), col("l_extendedprice"), col("l_discount")))
+      // the multi-distinct agg EXPANDs every row 4× and partial-aggregates
+      // in the scan stage — a 3-task 1.6 s job on the single-row-group file
+      // (JobProf r17); T's split copy gives that stage one task per core
+      val l = T(s, dir, "lineitem")
+        .select(col("l_quantity"), col("l_extendedprice"), col("l_discount"))
       val stats = l.agg(
         min(col("l_quantity")).as("min1"), max(col("l_quantity")).as("max1"),
         countDistinct(col("l_quantity")).as("ndv1"),
@@ -556,9 +555,10 @@ object Ingest {
         .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"),
           col("l_quantity"), col("l_extendedprice"),
           date_format(col("l_shipdate"), "yyyy-MM-dd").as("ship_day"))
-      // T.spread before the write: gzip JSON is unsplittable, so the file
-      // count written here IS the read-side parallelism (SCALE.md)
-      T.spread(s, proj).write.mode(SaveMode.Overwrite).option("compression", "gzip")
+      // gzip JSON is unsplittable, so the file count written here IS the
+      // read-side parallelism: one file per scan task of T's split copy,
+      // i.e. one per core (T.layout, SCALE.md)
+      proj.write.mode(SaveMode.Overwrite).option("compression", "gzip")
         .json(jsonScratch)
       s.read.schema(proj.schema).json(jsonScratch)
         .groupBy(col("l_returnflag"))

@@ -610,7 +610,12 @@ object Relational {
   /** Approximate percentile (Greenwald-Khanna sketch) — q11's scale path,
     * the same twin pattern as q55→q67: mergeable per-partition sketches
     * instead of a full sort per group. No oracle (sketches differ across
-    * engines by design); the accuracy-vs-exact bound is spec-checked. */
+    * engines by design); the accuracy-vs-exact bound is spec-checked.
+    * Its rows depend on the scan's partitioning: each scan task builds a
+    * partial sketch and the final aggregate merges them, so since T reads
+    * a one-file-per-core split copy of `lineitem` (T.layout) the sketch
+    * merges `k` partials and its p25/p50/p95 may move within the sketch's
+    * error bound from the one-partial values of a one-task scan. */
   private val q76 = Q(
     "q76_approx_percentile",
     (s, dir) =>

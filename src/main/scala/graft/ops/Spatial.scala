@@ -353,14 +353,14 @@ object Spatial {
     * makes a cross-engine oracle compare impossible). */
   private def ndviByMonth(s: SparkSession, sc: DataFrame, parcelsGeo: DataFrame,
       b: Double, months: DataFrame): DataFrame = {
-    // r17, tried and REVERTED: T.spread on `sc` to widen the 1-task scan
-    // stage of q74's single-file synthetic scenes (JobProf showed a 2.3 s
-    // 1-task PIP+partials job). Interleaved A/B said NO — q74 min
-    // 2.02→2.35 s, med 5.14→5.88 (4 cycles × 2 reps): the full-width
-    // exchange of the scenes rows costs more than the widened map stage
-    // saves. The floor was the one-task percentile PARTIAL aggregate: with
-    // ~4,400 composite keys it passed Spark's 128-key object-hash limit and
-    // external-sorted every later row. Sessions.build raises that limit.
+    // No exchange widens `sc`: r17 hash-spread the rows of q74's 1-task
+    // PIP+partials stage (2.3 s in JobProf) and the exchange cost more than
+    // the wider stage saved (q74 min 2.02→2.35 s, interleaved A/B). The
+    // width comes from the scan instead: q68's scenes derive from `events`,
+    // whose T.layout split copy scans in one task per core (its stage went
+    // 387 → 128 ms at sf0.1, SCALE.md). The percentile PARTIAL aggregate
+    // holds ~4,400 composite keys, past Spark's 128-key object-hash limit;
+    // Sessions.build raises that limit so it no longer external-sorts.
     val joined = spatialJoin(sc.filter(geeMonthWindow(col("date"))),
       broadcast(parcelsGeo), "cell_lon", "cell_lat", "geom", b)
       .withColumn("ndvi", (col("sr_b5") - col("sr_b4")) / (col("sr_b5") + col("sr_b4")))

@@ -297,9 +297,9 @@ object TextOps {
   private val q103 = Q(
     "q103_decontaminate",
     (s, dir) => {
-      // T.spread: corpus grams explode map-side against the broadcast set —
-      // compute-dense, must not run in one scan task (SCALE.md)
-      val withW = T.spread(s, T(s, dir, "documents"))
+      // corpus grams explode map-side against the broadcast set; the scan
+      // of T's split copy runs them on every core (T.layout, SCALE.md)
+      val withW = T(s, dir, "documents")
         .select(col("doc_id"), split(col("text"), " ").as("w"))
       val bench = withW
         .filter(col("doc_id") % 40 === 0 && col("doc_id") < 10000 &&
@@ -696,7 +696,7 @@ object TextOps {
   private val q116 = Q(
     "q116_dup_substrings",
     (s, dir) => {
-      val wins = T.spread(s, T(s, dir, "documents"))
+      val wins = T(s, dir, "documents")
         .filter(col("n_chars") >= 40)
         .select(col("doc_id"),
           explode(sequence(lit(1L), col("n_chars") - 39L, lit(10L))).as("i"),

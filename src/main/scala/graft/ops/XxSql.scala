@@ -100,23 +100,4 @@ private[ops] object XxSql {
     val sg = signed(st, hashIntConst(st, salt, hashLong(st, longCol, Left(42L))))
     st.add(s"(CAST((($sg % $m) + $m) % $m AS DOUBLE) / $m.0)")
   }
-
-  /** `pmod(xxhash64(longCol, intCol..., salt), m)` for multi-field hashes
-    * where later fields are COLUMNS (int-typed) — the scenes hole
-    * pattern's shape. Each intCol is folded with hashInt semantics. */
-  def pmodHash(st: Stages, longCol: String, intCols: Seq[String], salt: Int,
-      m: Long): String = {
-    var h = hashLong(st, longCol, Left(42L))
-    for (c <- intCols) {
-      val h0 = st.add(s"(($h + $P5 + 4) % $M64)")
-      // (c & 0xFFFFFFFF) * P1 mod 2^64 — c is a column: limb-split multiply
-      val masked = st.add(s"(($c % 4294967296 + 4294967296) % 4294967296)")
-      val prod = st.add(mul64(masked, P1))
-      val h1 = st.add(s"xor($h0, $prod)")
-      val h1r = st.add(rotl(h1, 23))
-      h = fmix(st, st.add(s"((${mul64(h1r, P2)} + $P3) % $M64)"))
-    }
-    val sg = signed(st, hashIntConst(st, salt, h))
-    st.add(s"((($sg % $m) + $m) % $m)")
-  }
 }

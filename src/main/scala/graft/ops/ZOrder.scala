@@ -187,9 +187,9 @@ object ZOrder {
   private val q191 = Q(
     "q191_knn_grid_join",
     (s, dir) => {
-      // T.spread: the 9x neighborhood explode runs pre-shuffle; keep it off
-      // a single scan task when the input is one row group (SCALE.md)
-      val pts = T.spread(s, T(s, dir, "events")).select(col("event_id"), col("event_type"),
+      // the 9x neighborhood explode runs pre-shuffle, in the scan stage of
+      // T's split copy: one task per core, not one (T.layout, SCALE.md)
+      val pts = T(s, dir, "events").select(col("event_id"), col("event_type"),
         (col("event_id") % 1024).as("px"), ((col("event_id") * 7) % 1024).as("py"))
       val probes = pts.filter(col("event_type") === "purchase")
         .select(col("event_id").as("pid"), col("px"), col("py"),

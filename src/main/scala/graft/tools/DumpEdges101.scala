@@ -13,7 +13,7 @@ object DumpEdges101 {
     val outDir = args(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val s = graft.Sessions.build(s"local[$cpus]", cpus.toInt)
-    val base = graft.T.spread(s, graft.T(s, sfDir, "documents"))
+    val base = graft.T(s, sfDir, "documents")
       .select(col("doc_id"), col("text"))
     val span = graft.llm.Dedup.docSpan(base)
     val near = base.filter(col("doc_id") % 25 === 0)

@@ -34,8 +34,8 @@ object JobProf {
           val j = jobs.getOrElseUpdate(e.jobId, J(e.jobId))
           j.start = e.time
           j.tasks = e.stageInfos.map(_.numTasks).sum
-          j.site = Option(e.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("?")
+          // the result stage's name is the job's short call site
+          j.site = e.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("?")
         }
       override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
         lock.synchronized { jobs.get(e.jobId).foreach(_.end = e.time) }
