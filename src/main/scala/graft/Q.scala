@@ -36,8 +36,6 @@ object T {
     Ts.norm(Parquet.read(spark,
       layout(spark, s"$sfDir/$name.parquet", spark.sparkContext.defaultParallelism)))
 
-  private val splits = scala.collection.mutable.HashMap.empty[String, String]
-
   /** The path to scan for the parquet table at `path` in a session of
     * parallelism `k`. Spark splits parquet only at row-group boundaries,
     * and a driver table is one file with one row group, so every scan of
@@ -49,39 +47,28 @@ object T {
     * every later scan reads that copy: one task per core, no exchange.
     * Any other table is read in place, as the many-file inputs of a real
     * cluster always are; one in at least `min(8, k)` files is, without a
-    * footer read. The memo key is the path, each data file's length and
-    * mtime, and `k`; the copy's directory is named by a digest of the
-    * whole key, so a rewritten source or another `k` gets its own copy
-    * and never empties an earlier one. DuckDB and the file-streaming
-    * sources read the original file. Measured at sf0.1 on a 4-core VM
-    * (SCALE.md): q53's and q68's `events` stages 202 → 83 ms and 359 →
-    * 148 ms; the split of all ten tables costs 2.1–2.3 s once per JVM. */
-  private[graft] def layout(spark: SparkSession, path: String, k: Int): String = {
-    val files = Parquet.files(spark, path)
-    val key = (s"$path k=$k" +: files.map(f =>
-      s"${f.getPath} ${f.getLen} ${f.getModificationTime}")).mkString("\n")
-    splits.synchronized(splits.getOrElseUpdate(key, {
+    * footer read. The choice and the copy are a [[Scratch.derived]] table
+    * of the file and `k`, so a rewritten source or another `k` gets its
+    * own copy and never empties an earlier one. DuckDB and the
+    * file-streaming sources read the original file. Measured at sf0.1 on
+    * a 4-core VM (SCALE.md): q53's and q68's `events` stages 202 → 83 ms
+    * and 359 → 148 ms; the split of all ten tables costs 2.1–2.3 s once
+    * per JVM. */
+  private[graft] def layout(spark: SparkSession, path: String, k: Int): String =
+    Scratch.derived(spark, "table_split", Seq(path), k) { dir =>
+      val files = Parquet.files(spark, path)
       val wide = math.min(8, k)
       lazy val (groups, rows) = Parquet.rowGroups(spark, files)
       if (files.length >= wide || groups >= wide || rows < k) path
       else {
-        val digest = java.security.MessageDigest.getInstance("SHA-256")
-          .digest(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        val dir = s"${Scratch.dir("table_split")}/${new java.io.File(path).getName}_" +
-          digest.take(10).map(b => f"$b%02x").mkString
         Parquet.read(spark, path).coalesce(1).write
           .option("maxRecordsPerFile", (rows + k - 1) / k)
           .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(dir)
         dir
       }
-    }))
-  }
+    }
 }
 
-/** Central session tuning shared by Verify / Bench / tests. local[N] is a
-  * stand-in for a multi-executor cluster: shuffle partitions sized to cores
-  * (not the 200 default), AQE on (runtime coalescing + skew-join splitting),
-  * nanos parquet read enabled for the events table. */
 /** The ONE place that knows how the driver data's `ts` column is stored.
   * Driver generations have shipped it two ways — parquet TIMESTAMP(NANOS)
   * (readable only as a raw long under `nanosAsLong`) and TIMESTAMP(MICROS,
@@ -134,6 +121,10 @@ object Ts {
     }
 }
 
+/** Central session tuning shared by Verify / Bench / tests. local[N] is a
+  * stand-in for a multi-executor cluster: shuffle partitions sized to cores
+  * (not the 200 default), AQE on (runtime coalescing + skew-join splitting),
+  * nanos parquet read enabled for the events table. */
 object Sessions {
   def build(master: String, shufflePartitions: Int): SparkSession = {
     // Shuffle/cache local dir on tmpfs when available: this VM's root

@@ -1,12 +1,11 @@
 package graft.llm
 
-/** Fast deterministic hashing for signature UDFs (splitmix64 finalizer over
-  * polynomial string hashes — public-domain constructions). One polynomial
-  * pass per token/shingle, then one 3-op finalize per hash seed, so a
-  * 64-seed MinHash costs ~64 multiplies per shingle, not 64 string hashes. */
+/** Karp–Rabin character-gram hashing mod [[BigP]] and the kernels built on
+  * it: the min-gram [[fingerprint]] and the winnowing fingerprint set
+  * [[winnow]]. Every value is pure int64 arithmetic that DuckDB replays,
+  * which keeps q24's and q92's signatures under the oracle gate. (The
+  * MinHash/SimHash signatures are [[Dedup]]'s mod-p kernels.) */
 object Hashing {
-
-  val Golden = 0x9e3779b97f4a7c15L
 
   /** Modulus of the replayable Karp–Rabin gram hash (largest prime we
     * searched above 3.5·10¹⁶): (P−1)·257 + 127 < 2⁶³, so the Horner
@@ -73,76 +72,6 @@ object Hashing {
       i += 1
     }
     hs
-  }
-
-  /** splitmix64 avalanche finalizer. */
-  @inline def mix(z0: Long): Long = {
-    var z = z0
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
-
-  /** 64-bit polynomial hash of a char range. */
-  @inline def poly(s: String, from: Int, until: Int): Long = {
-    var h = 1125899906842597L
-    var i = from
-    while (i < until) { h = h * 31 + s.charAt(i); i += 1 }
-    h
-  }
-
-  /** Seeded hash of a precomputed polynomial value. */
-  @inline def seeded(p: Long, seed: Int): Long = mix(p ^ (seed * Golden))
-
-  /** MinHash signature over distinct word 3-shingles (whole text when
-    * shorter), k seeds. */
-  def minhash(text: String, k: Int): Array[Long] = {
-    val sig = Array.fill(k)(Long.MaxValue)
-    val seen = new java.util.HashSet[Long]()
-    foreachShinglePoly(text) { p =>
-      if (seen.add(p)) {
-        var s = 0
-        while (s < k) {
-          val h = seeded(p, s)
-          if (h < sig(s)) sig(s) = h
-          s += 1
-        }
-      }
-    }
-    sig
-  }
-
-  /** LSH band keys over a MinHash signature: bands of `rows` values folded
-    * into one key each (band index mixed in so bands don't collide). */
-  def bands(sig: Array[Long], rows: Int): Array[Long] = {
-    val nBands = sig.length / rows
-    val out = new Array[Long](nBands)
-    var b = 0
-    while (b < nBands) {
-      var h = mix(b * Golden)
-      var i = 0
-      while (i < rows) { h = mix(h ^ sig(b * rows + i)); i += 1 }
-      out(b) = h
-      b += 1
-    }
-    out
-  }
-
-  /** 64-bit SimHash over word tokens. */
-  def simhash(text: String): Long = {
-    val counts = new Array[Int](64)
-    foreachTokenPoly(text) { p =>
-      val h = mix(p ^ Golden)
-      var j = 0
-      while (j < 64) {
-        if (((h >>> j) & 1L) != 0) counts(j) += 1 else counts(j) -= 1
-        j += 1
-      }
-    }
-    var out = 0L
-    var j = 0
-    while (j < 64) { if (counts(j) > 0) out |= (1L << j); j += 1 }
-    out
   }
 
   /** Winnowing-style fingerprint: min [[polyModP]] hash over char
@@ -220,42 +149,5 @@ object Hashing {
     var a = 0
     while (it.hasNext) { arr(a) = it.next(); a += 1 }
     arr
-  }
-
-  /** Iterate polynomial hashes of word 3-shingles without materializing
-    * shingle strings (whole text if < 3 tokens). */
-  private def foreachShinglePoly(text: String)(f: Long => Unit): Unit = {
-    val bounds = tokenBounds(text)
-    val nTok = bounds.length
-    if (nTok < 3) { f(poly(text, 0, text.length)); return }
-    var i = 0
-    while (i + 2 < nTok) {
-      // hash the char span from token i start to token i+2 end — identical
-      // token content ⇒ identical span text (single-space separated)
-      val from = bounds(i)._1
-      val until = bounds(i + 2)._2
-      f(poly(text, from, until))
-      i += 1
-    }
-  }
-
-  private def foreachTokenPoly(text: String)(f: Long => Unit): Unit = {
-    val bounds = tokenBounds(text)
-    var i = 0
-    while (i < bounds.length) { f(poly(text, bounds(i)._1, bounds(i)._2)); i += 1 }
-  }
-
-  /** (start, end) offsets of space-separated tokens. */
-  private def tokenBounds(text: String): Array[(Int, Int)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
-    var start = 0
-    var i = 0
-    while (i <= text.length) {
-      if (i == text.length || text.charAt(i) == ' ') {
-        out += ((start, i)); start = i + 1
-      }
-      i += 1
-    }
-    out.toArray
   }
 }

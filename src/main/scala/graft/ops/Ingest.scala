@@ -213,7 +213,7 @@ object Ingest {
       .sortWithinPartitions(asc_nulls_first(sortCol))
 
   /** q115: compaction under the oracle gate. A 64-file fragmented copy of
-    * events is staged once per JVM (Scratch-cached), compacted to 4
+    * events (a [[graft.Scratch.derived]] table of the file) is compacted to 4
     * range-disjoint ts-sorted files, and the COMPACTED copy is
     * fingerprinted per hour-of-day (count + decimal-exact sum) — the
     * oracle recomputes from the original events table, so the hash pins
@@ -223,11 +223,12 @@ object Ingest {
   private val q115 = Q(
     "q115_compaction",
     (s, dir) => {
-      val frag = graft.Scratch.dir(s"frag_events_${dir.hashCode.toHexString}")
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(frag, "_SUCCESS")))
-        Parquet.read(s, s"$dir/events.parquet")
-          .repartition(64).write.mode(SaveMode.Overwrite).parquet(frag)
-      val out = graft.Scratch.dir(s"compact_events_${dir.hashCode.toHexString}")
+      val src = s"$dir/events.parquet"
+      val frag = graft.Scratch.derived(s, "frag_events", Seq(src)) { d =>
+        Parquet.read(s, src).repartition(64).write.mode(SaveMode.Overwrite).parquet(d)
+        d
+      }
+      val out = graft.Scratch.dir("compact_events")
       compact(Parquet.read(s, frag), 4, "ts")
         .write.mode(SaveMode.Overwrite).parquet(out)
       val compacted = Parquet.read(s, out)
@@ -245,10 +246,10 @@ object Ingest {
 
   /** q121: retention/vacuum by partition — the delete-old-data pass that
     * pairs with compaction (q115) in every ingest pipeline. The events
-    * table is laid out day-partitioned once per JVM; retention then
-    * DELETES whole expired partitions (here: keep day >= the table's
-    * 11th distinct day): each expired `day=` directory is removed
-    * outright, surviving partitions are untouched bytes — no data is
+    * table is laid out day-partitioned once per JVM ([[retainedTable]]);
+    * retention then DELETES whole expired partitions (here: keep day >=
+    * the table's 11th distinct day): each expired `day=` directory is
+    * removed outright, surviving partitions are untouched bytes — no data is
     * read or rewritten. At 100 TB partition-aligned retention is a
     * metadata operation per expired partition, never a full-table
     * rewrite (the in-place UPDATE sibling is q108's merge + dynamic
@@ -257,12 +258,8 @@ object Ingest {
   private val q121 = Q(
     "q121_retention",
     (s, dir) => {
-      val t = T(s, dir, "events")
-        .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-      val base = graft.Scratch.dir(s"retained_events_${dir.hashCode.toHexString}")
-      val tbl = s"$base/by_day"
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(tbl)))
-        t.write.partitionBy("day").mode(SaveMode.Overwrite).parquet(tbl)
+      val t = dayed(s, dir)
+      val tbl = retainedTable(s, dir)
       val cutoff = t.select(col("day")).distinct()
         .orderBy(asc_nulls_first("day")).limit(11)
         .agg(max(col("day"))).head().getString(0)
@@ -273,15 +270,7 @@ object Ingest {
       val expired = Manifest
         .partitionValues(s, tbl, date_format(col("day"), "yyyy-MM-dd"))
         .filter(_ < cutoff)
-      expired.foreach { d =>
-        val p = java.nio.file.Paths.get(tbl, s"day=$d")
-        if (java.nio.file.Files.exists(p)) {
-          val walk = java.nio.file.Files.walk(p)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => { java.nio.file.Files.delete(f); () })
-          finally walk.close()
-        }
-      }
+      expired.foreach(d => graft.Scratch.rm(new java.io.File(tbl, s"day=$d")))
       Parquet.read(s, tbl)
         .groupBy(date_format(col("day"), "yyyy-MM-dd").as("day"))
         .agg(count(lit(1)).as("n_events"),
@@ -298,6 +287,18 @@ object Ingest {
       GROUP BY day ORDER BY day ASC NULLS FIRST"""),
     "partition-aligned retention: expired day partitions dropped as directory deletes, survivors untouched")
 
+  private def dayed(s: SparkSession, dir: String): DataFrame =
+    T(s, dir, "events").withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
+
+  /** q121's table: events partitioned by `day`, a [[graft.Scratch.derived]]
+    * table of the events file. Retention deletes its expired partitions
+    * in place, so every later call finds them gone. */
+  private[graft] def retainedTable(s: SparkSession, dir: String): String =
+    graft.Scratch.derived(s, "retained_events", Seq(s"$dir/events.parquet")) { tbl =>
+      dayed(s, dir).write.partitionBy("day").mode(SaveMode.Overwrite).parquet(tbl)
+      tbl
+    }
+
   /** q122: schema evolution — the ingest reality that upstream producers
     * ADD columns mid-stream. Batch 1 writes (event_id, value); batch 2
     * adds a `source` column; `mergeSchema` unifies the footers at read
@@ -307,15 +308,15 @@ object Ingest {
   private val q122 = Q(
     "q122_schema_evolution",
     (s, dir) => {
-      val base = graft.Scratch.dir(s"evolve_${dir.hashCode.toHexString}")
-      val ev = T(s, dir, "events")
-      if (!java.nio.file.Files.exists(java.nio.file.Paths.get(base, "b1", "_SUCCESS"))) {
+      val base = graft.Scratch.derived(s, "evolve", Seq(s"$dir/events.parquet")) { base =>
+        val ev = T(s, dir, "events")
         ev.filter(col("event_id") % 2 === 0)
           .select(col("event_id"), col("value"))
           .write.mode(SaveMode.Overwrite).parquet(s"$base/b1")
         ev.filter(col("event_id") % 2 === 1)
           .select(col("event_id"), col("value"), col("event_type").as("source"))
           .write.mode(SaveMode.Overwrite).parquet(s"$base/b2")
+        base
       }
       s.read.option("mergeSchema", "true").parquet(s"$base/b1", s"$base/b2")
         .groupBy(coalesce(col("source"), lit("<pre-evolution>")).as("source"))
@@ -793,7 +794,7 @@ object Ingest {
   private val q173 = Q(
     "q173_write_audit_publish",
     (s, dir) => {
-      val root = graft.Scratch.fresh(s"wap_${dir.replaceAll("[^A-Za-z0-9]", "_")}")
+      val root = graft.Scratch.fresh("wap")
       val clean = T(s, dir, "orders").filter(col("o_orderstatus") === "O")
       require(Wap.publish(s, root, "v1", clean), "clean v1 must publish")
       val dirty = T(s, dir, "orders")
@@ -823,13 +824,10 @@ object Ingest {
     * spec — is exactly the 100 TB cost this pattern avoids. The range
     * read prunes year dirs on the old layout and month dirs on the new
     * (plan-gated), applies the residual predicate on both, and unions a
-    * normalized projection. */
-  private lazy val evolvedRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * normalized projection. Both layouts are a [[graft.Scratch.derived]]
+    * table of the orders file. */
   def ensureEvolvedLayout(s: SparkSession, sfDir: String): String =
-    evolvedRoots.computeIfAbsent(sfDir.replaceAll("[^A-Za-z0-9]", "_"), t => {
-      val root = graft.Scratch.dir(s"evolved_$t")
+    graft.Scratch.derived(s, "evolved", Seq(s"$sfDir/orders.parquet")) { root =>
       val o = T(s, sfDir, "orders")
         .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"),
           year(col("o_orderdate")).as("o_year"),
@@ -839,7 +837,7 @@ object Ingest {
       o.filter(col("o_year") >= 1998).drop("o_year")
         .write.mode(SaveMode.Overwrite).partitionBy("o_month").parquet(s"$root/v2")
       root
-    })
+    }
 
   private val q186 = Q(
     "q186_partition_evolution",
@@ -879,15 +877,22 @@ object Ingest {
     * symlink identity and the before/after counts). The oracle computes
     * the post-erasure aggregate from the source predicate, so a doc
     * surviving erasure (or over-deleted) breaks the hash. */
-  def takedownErase(s: SparkSession, dir: String): DataFrame = {
-    val t = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val v1 = graft.Scratch.dir(s"corpus_src_$t")
-    val v1Marker = java.nio.file.Paths.get(v1, "_SUCCESS")
-    if (!java.nio.file.Files.exists(v1Marker)) {
+  def takedownErase(s: SparkSession, dir: String): DataFrame =
+    Parquet.read(s, erasedCorpus(s, dir))
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+      .orderBy(asc_nulls_first("source"))
+
+  /** The erased table's root, written afresh on every call. The source
+    * table (documents partitioned by source) is a [[graft.Scratch.derived]]
+    * table of the documents file. */
+  private[graft] def erasedCorpus(s: SparkSession, dir: String): String = {
+    val v1 = graft.Scratch.derived(s, "corpus_src", Seq(s"$dir/documents.parquet")) { v1 =>
       T(s, dir, "documents").write.mode(SaveMode.Overwrite)
         .partitionBy("source").parquet(v1)
+      v1
     }
-    val v2 = graft.Scratch.fresh(s"corpus_erased_$t")
+    val v2 = graft.Scratch.fresh("corpus_erased")
     // ONE source-cardinality aggregation answers both "which sources
     // exist" and "which contain removals" (was two separate
     // distinct+collect jobs), and the per-source partition rewrites are
@@ -938,10 +943,7 @@ object Ingest {
         if (firstFailure != null) throw firstFailure
       } finally pool.shutdown()
     }
-    Parquet.read(s, v2)
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-      .orderBy(asc_nulls_first("source"))
+    v2
   }
 
   private val q187 = Q(
@@ -961,25 +963,20 @@ object Ingest {
     * pointer does not reference and the read path — which only ever
     * resolves the pointer — is provably unaffected (the oracle computes
     * v2's contents from the source; VacuumSpec pins v1's removal and v2's
-    * survival). Deletion refuses to cross symlinks (same guard as
-    * Scratch.rm) so a layout that link-reuses files (q187) can never be
-    * hollowed out by GC of a sibling. */
+    * survival). Deletion refuses to cross symlinks ([[graft.Scratch.rm]])
+    * so a layout that link-reuses files (q187) can never be hollowed out
+    * by GC of a sibling. */
   def vacuum(root: String, keep: String): Seq[String] = {
-    def deleteTree(f: java.io.File): Unit = {
-      if (!java.nio.file.Files.isSymbolicLink(f.toPath))
-        Option(f.listFiles()).foreach(_.foreach(deleteTree))
-      f.delete(); ()
-    }
     val removed = Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("v") && f.getName != keep)
-    removed.foreach(deleteTree)
+    removed.foreach(graft.Scratch.rm)
     removed.map(_.getName).toSeq.sorted
   }
 
   private val q188 = Q(
     "q188_vacuum",
     (s, dir) => {
-      val root = graft.Scratch.fresh(s"vac_${dir.replaceAll("[^A-Za-z0-9]", "_")}")
+      val root = graft.Scratch.fresh("vac")
       require(Wap.publish(s, root, "v1",
         T(s, dir, "orders").filter(col("o_orderstatus") === "O")), "v1 publish")
       require(Wap.publish(s, root, "v2",
@@ -1105,15 +1102,13 @@ object Ingest {
     * read-side federation an ingest zoo actually needs — history in one
     * format, fresh feeds in another). The oracle aggregates the same
     * rows from the parquet original: any per-format parse/serialize
-    * infidelity or a slice boundary error breaks the hash. */
-  private lazy val fedRoot =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+    * infidelity or a slice boundary error breaks the hash. The ORC and
+    * JSON slices are a [[graft.Scratch.derived]] table of the orders
+    * file. */
   private val q195 = Q(
     "q195_federated_formats",
     (s, dir) => {
-      val root = fedRoot.computeIfAbsent(dir.replaceAll("[^A-Za-z0-9]", "_"), t => {
-        val r = graft.Scratch.dir(s"fed_$t")
+      val root = graft.Scratch.derived(s, "fed", Seq(s"$dir/orders.parquet")) { r =>
         val base = T(s, dir, "orders")
           .select(col("o_orderkey"), col("o_orderstatus"),
             col("o_totalprice"),
@@ -1123,7 +1118,7 @@ object Ingest {
         base.filter(col("o_orderkey") % 3 === 2)
           .write.mode(SaveMode.Overwrite).option("compression", "gzip").json(s"$r/json")
         r
-      })
+      }
       val pq = T(s, dir, "orders").filter(col("o_orderkey") % 3 === 0)
         .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
           date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"))
@@ -1159,10 +1154,7 @@ object Ingest {
   private val q197 = Q(
     "q197_dead_letter",
     (s, dir) => {
-      val t = dir.replaceAll("[^A-Za-z0-9]", "_")
-      val feed = graft.Scratch.dir(s"dlq_feed_$t")
-      val marker = java.nio.file.Paths.get(feed, "_SUCCESS")
-      if (!java.nio.file.Files.exists(marker)) {
+      val feed = graft.Scratch.derived(s, "dlq_feed", Seq(s"$dir/orders.parquet")) { feed =>
         T(s, dir, "orders")
           .select(concat(
             when(col("o_orderkey") % 50 === 0, lit("XX")).otherwise(lit("")),
@@ -1170,6 +1162,7 @@ object Ingest {
             lit(",\"p\":"), (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast(LongType),
             lit(",\"s\":\""), col("o_orderstatus"), lit("\"}")).as("value"))
           .write.mode(SaveMode.Overwrite).text(feed)
+        feed
       }
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType),
@@ -1218,24 +1211,29 @@ object Ingest {
       FROM orders GROUP BY 1 ORDER BY month ASC NULLS FIRST"""),
     "reprocessing-window refresh: frozen history reused file-identical, hot window recomputed from raw; oracle = full recompute (split-union equivalence under the hash gate)")
 
-  def reprocessModel(s: SparkSession, dir: String): DataFrame = {
-    val t = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val frozen = graft.Scratch.dir(s"frozen_model_$t")
-    val cutoff = "2000-01"
-    val marker = java.nio.file.Paths.get(frozen, "_SUCCESS")
-    val monthly = T(s, dir, "orders")
+  private val ReprocessCutoff = "2000-01"
+
+  private def monthlyOrders(s: SparkSession, dir: String): DataFrame =
+    T(s, dir, "orders")
       .select(date_format(col("o_orderdate"), "yyyy-MM").as("month"),
         (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast(LongType).as("cents"))
-    if (!java.nio.file.Files.exists(marker)) {
-      monthly.filter(col("month") < cutoff)
+
+  /** q199's frozen history: the months before the cutoff aggregated once,
+    * a [[graft.Scratch.derived]] table of the orders file. */
+  private[graft] def frozenHistory(s: SparkSession, dir: String): String =
+    graft.Scratch.derived(s, "frozen_model", Seq(s"$dir/orders.parquet")) { frozen =>
+      monthlyOrders(s, dir).filter(col("month") < ReprocessCutoff)
         .groupBy(col("month"))
         .agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("sum_cents"))
         .write.mode(SaveMode.Overwrite).parquet(frozen)
+      frozen
     }
-    val hot = monthly.filter(col("month") >= cutoff)
+
+  def reprocessModel(s: SparkSession, dir: String): DataFrame = {
+    val hot = monthlyOrders(s, dir).filter(col("month") >= ReprocessCutoff)
       .groupBy(col("month"))
       .agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("sum_cents"))
-    Parquet.read(s, frozen).unionByName(hot)
+    Parquet.read(s, frozenHistory(s, dir)).unionByName(hot)
       .orderBy(asc_nulls_first("month"))
   }
 

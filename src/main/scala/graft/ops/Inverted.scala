@@ -26,18 +26,11 @@ object Inverted {
 
   val NumBuckets = 16
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def tag(sfDir: String): String =
-    sfDir.replaceAll("[^A-Za-z0-9]", "_")
-
   /** Postings layout: (token, doc_id, tf) partitioned by token-hash
-    * bucket, token-sorted within each bucket's files (idempotent per
-    * sfDir within the JVM). */
+    * bucket, token-sorted within each bucket's files — a
+    * [[graft.Scratch.derived]] table of the documents file. */
   def ensurePostings(s: SparkSession, sfDir: String): String =
-    built.computeIfAbsent(tag(sfDir), t => {
-      val path = graft.Scratch.dir(s"inverted_$t")
+    graft.Scratch.derived(s, "inverted", Seq(s"$sfDir/documents.parquet")) { path =>
       T(s, sfDir, "documents")
         .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
         .groupBy(col("token"), col("doc_id"))
@@ -47,7 +40,7 @@ object Inverted {
         .sortWithinPartitions("token", "doc_id")
         .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(path)
       path
-    })
+    }
 
   /** Conjunctive lookup: docs containing ALL `terms`, with total term
     * frequency. Exposed for the plan spec. */

@@ -167,27 +167,20 @@ object Spatial {
       .drop("month_start", "cell_id", "month_idx")
   }
 
-  /** The scenes fixture materialized as parquet PARTITIONED BY year —
-    * written once per (JVM, sfDir) under [[graft.Scratch]] (removed at
-    * exit). This is the physical layout a 100 TB scene archive would
-    * have (date-partitioned object storage): a year predicate prunes
-    * whole partition directories at the file source instead of scanning
-    * six years to keep one. q43's 2023 filter and q40's report read
-    * through this path (plan-spec'd in PlanShapeSpec); the in-memory
-    * generator [[scenes]] remains the fixture source of truth. */
-  private val scenesPathCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def scenesTable(s: SparkSession, sfDir: String): DataFrame = {
-    val path = scenesPathCache.computeIfAbsent(sfDir, _ => {
-      val p = graft.Scratch.fresh(
-        "scenes_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_"))
+  /** The scenes fixture materialized as parquet PARTITIONED BY year — a
+    * [[graft.Scratch.derived]] table of the events file (whose row count
+    * sizes the grid). This is the physical layout a 100 TB scene archive
+    * would have (date-partitioned object storage): a year predicate
+    * prunes whole partition directories at the file source instead of
+    * scanning six years to keep one. q43's 2023 filter and q40's report
+    * read through this path (plan-spec'd in PlanShapeSpec); the
+    * in-memory generator [[scenes]] remains the fixture source of truth. */
+  def scenesTable(s: SparkSession, sfDir: String): DataFrame =
+    Parquet.read(s, graft.Scratch.derived(s, "scenes", Seq(s"$sfDir/events.parquet")) { p =>
       scenes(s, sfDir).withColumn("yr", year(col("date")))
         .write.partitionBy("yr").mode("overwrite").parquet(p)
       p
     })
-    Parquet.read(s, path)
-  }
 
   /** The reference's month-window quirk, replicated not fixed
     * (load_report.py:69-70,130-131): windows run 01..28 (Feb) / 01..30

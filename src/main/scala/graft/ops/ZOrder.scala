@@ -107,16 +107,13 @@ object ZOrder {
     p1(px) | (p1(py) << 1)
   }
 
-  private val zBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Events Z-order-clustered into 16 range-disjoint files on the Morton
     * code of the derived (px, py) grid point; the code column is KEPT
     * (materialized sort key) so parquet footers — and q174's explicit
-    * manifest — carry tight per-file min/max over it. */
+    * manifest — carry tight per-file min/max over it. A
+    * [[graft.Scratch.derived]] table of the events file. */
   def ensureZLayout(s: org.apache.spark.sql.SparkSession, sfDir: String): String =
-    zBuilt.computeIfAbsent(sfDir.replaceAll("[^A-Za-z0-9]", "_"), t => {
-      val path = graft.Scratch.dir(s"zlayout_$t")
+    graft.Scratch.derived(s, "zlayout", Seq(s"$sfDir/events.parquet")) { path =>
       T(s, sfDir, "events")
         .select(col("event_id"), col("user_id"), col("value"),
           (col("event_id") % 1024).cast("double").as("px"),
@@ -125,7 +122,7 @@ object ZOrder {
         .repartitionByRange(16, col("z")).sortWithinPartitions(col("z"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(path)
       path
-    })
+    }
 
   /** q174: bbox query through the Z-order layout — q81's write side
     * composed with q164's read side. The query tile px∈[256,320) ×

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * as an explicit manifest makes the skipping inspectable and testable
   * (ZoneMapSpec asserts the prune fires AND is lossless).
   *
-  * Scale shape: the clustered copy is written once per sfDir
+  * Scale shape: the clustered copy is written once per orders file
   * (`repartitionByRange` + sort on the clustering column — one range
   * exchange, the same pay-once layout cost as q97's buckets); the
   * manifest is ONE ROW PER FILE, collected at the driver (bounded by
@@ -28,23 +28,16 @@ object ZoneMap {
 
   val NumFiles = 16
 
-  private val built =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def tag(sfDir: String): String =
-    sfDir.replaceAll("[^A-Za-z0-9]", "_")
-
   /** Orders clustered into [[NumFiles]] range-disjoint files on
-    * o_orderdate (idempotent per sfDir within the JVM). */
+    * o_orderdate — a [[graft.Scratch.derived]] table of the orders file. */
   def ensureClustered(s: SparkSession, sfDir: String): String =
-    built.computeIfAbsent(tag(sfDir), t => {
-      val path = graft.Scratch.dir(s"zonemap_$t")
+    graft.Scratch.derived(s, "zonemap", Seq(s"$sfDir/orders.parquet")) { path =>
       T(s, sfDir, "orders")
         .repartitionByRange(NumFiles, col("o_orderdate"))
         .sortWithinPartitions("o_orderdate")
         .write.mode(SaveMode.Overwrite).parquet(path)
       path
-    })
+    }
 
   /** One zone per file: (path, min, max) of the clustering column as
     * epoch micros (longs sidestep the session's java.time row encoding;

@@ -200,27 +200,17 @@ object GeoTiff {
 
   // ---- driver-contract query --------------------------------------------
 
-  /** Deterministic fixture (written once per JVM): 200×100 float32 cells,
-    * value = (col·7 + row·13) mod 1000 — integral, hence EXACT in float32,
-    * so DuckDB reproduces the cells arithmetically without reading the
-    * file; the query reads them through the REAL TIFF parser. */
-  def fixturePath(): String = {
-    val p = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_elev_200x100.tif")
-    if (!java.nio.file.Files.exists(p)) {
-      // write-to-temp + atomic move: concurrent JVMs (Verify ∥ Bench) must
-      // never observe a torn fixture
-      val tmp = java.nio.file.Files.createTempFile("graft_elev_", ".tif")
-      write(tmp.toString, 200, 100, 10.0, 20.0, 0.01,
-        i => ((i % 200) * 7 + (i / 200) * 13) % 1000)
-      try java.nio.file.Files.move(tmp, p,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException =>
-        java.nio.file.Files.deleteIfExists(tmp)
-      }
+  /** Deterministic fixture, a [[graft.Scratch.derived]] file written once
+    * per JVM: 200×100 float32 cells, value = (col·7 + row·13) mod 1000 —
+    * integral, hence EXACT in float32, so DuckDB reproduces the cells
+    * arithmetically without reading the file; the query reads them
+    * through the REAL TIFF parser. */
+  def fixturePath(s: SparkSession): String =
+    graft.Scratch.derived(s, "elev_fixture", Nil) { d =>
+      val p = s"$d/elev_200x100.tif"
+      write(p, 200, 100, 10.0, 20.0, 0.01, i => ((i % 200) * 7 + (i / 200) * 13) % 1000)
+      p
     }
-    p.toString
-  }
 
   /** q72: S4 raster ingest under the ORACLE gate — zonal mean over 5
     * vertical strips of the raster read from a real .tif through the real
@@ -228,7 +218,7 @@ object GeoTiff {
   private val q72 = Q(
     "q72_geotiff_zonal_oracle",
     (s, _) => {
-      val cells = readCells(s, fixturePath())
+      val cells = readCells(s, fixturePath(s))
       cells
         .withColumn("strip", floor((col("cell_x") - 10.0) / 0.4).cast("long"))
         .groupBy(col("strip"))

@@ -11,30 +11,6 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DecimalType, DoubleTy
   * oracle — proving batch/stream agreement on the same input. */
 object Streams {
 
-  /** tmpfs checkpoint dirs not yet cleaned up — deleted by a JVM shutdown
-    * hook so an abnormal exit (uncaught throw, SIGTERM) cannot leak RAM
-    * on /dev/shm until reboot. */
-  private val pendingCkptDirs =
-    java.util.Collections.synchronizedSet(new java.util.HashSet[String]())
-
-  private def deleteRecursively(d: String): Unit = {
-    val p = java.nio.file.Paths.get(d)
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-      finally walk.close()
-    }
-  }
-
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      pendingCkptDirs.toArray(Array.empty[String]).foreach { d =>
-        try deleteRecursively(d) catch { case _: Throwable => () }
-      }
-    }, "graft-ckpt-cleanup"))
-  }
-
   /** Scale-aware stateful shuffle-partition count. The per-query bases
     * (8, or 4 for the outer interval joins) were tuned at sf0.1, where
     * the fixed per-batch commit floor dominates and fewer stores win.
@@ -83,25 +59,19 @@ object Streams {
     val oldP = s.conf.get(pKey)
     val oldN = s.conf.get(nKey)
     val oldC = s.conf.getOption(cKey)
-    // Checkpoint on tmpfs when available: these one-shot replays
-    // re-derive all state from the staged source on any restart, so
-    // checkpoint durability buys nothing. A fresh /dev/shm dir per run
-    // (no cross-rep resume; deleted below) keeps the commit protocol
-    // identical. The per-batch commit floor measured on a 4-core VM was
-    // not the checkpoint writes but Hadoop starting a `chmod` per
+    // Checkpoint under graft.Scratch (tmpfs when available): these
+    // one-shot replays re-derive all state from the staged source on any
+    // restart, so checkpoint durability buys nothing. A fresh dir per run
+    // (no cross-rep resume; deleted below, or with the scratch root at
+    // exit) keeps the commit protocol identical. The per-batch commit
+    // floor measured on a 4-core VM was not the checkpoint writes but Hadoop starting a `chmod` per
     // checkpoint file and directory and two `readlink`s per rename;
     // `Sessions.build` removes those (graft/LocalFs.scala), and q73's
     // state commit went 0.496 → 0.038 s per pass. Production long-lived
     // streams put checkpoints on durable storage — that is a recovery
     // requirement, not part of the operator's cost model.
-    val ckBase = {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite)
-        Some(java.nio.file.Files
-          .createTempDirectory(shm.toPath, "graft_ckpt_").toString)
-      else None
-    }
-    ckBase.foreach { d => pendingCkptDirs.add(d); s.conf.set(cKey, d) }
+    val ckBase = graft.Scratch.temp("ckpt")
+    s.conf.set(cKey, ckBase)
     // snapshot of already-active queries: anything NEW in the finally
     // block was started by `body` and may hold state under ckBase — stop
     // it before the checkpoint dir is deleted (deleting under a live
@@ -127,8 +97,19 @@ object Streams {
       // it before deleting its checkpoint out from under it
       s.streams.active.filterNot(q => preActive.contains(q.id))
         .foreach(q => try q.stop() catch { case _: Throwable => () })
-      ckBase.foreach { d => deleteRecursively(d); pendingCkptDirs.remove(d) }
+      graft.Scratch.rm(new java.io.File(ckBase))
     }
+  }
+
+  /** The staged input of a replayed stream, written by `write` into an
+    * empty dir. With a `source` (the parquet file the input frame is read
+    * from) it is a [[graft.Scratch.derived]] table of that file, staged
+    * once per JVM; without one (an in-memory frame) it is staged afresh
+    * on every call. */
+  private def staged(s: SparkSession, name: String, source: Option[String])(
+      write: String => Unit): String = source match {
+    case Some(src) => graft.Scratch.derived(s, name, Seq(src)) { d => write(d); d }
+    case None => val d = graft.Scratch.fresh(name); write(d); d
   }
 
   /** Run a tumbling-window streaming aggregation to completion over the
@@ -719,16 +700,17 @@ object Streams {
     * result. At 100 TB the per-batch work is O(batch + touched MV
     * partitions); the full-scan equivalent is O(history) per refresh. */
   def incrementalMv(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
-    val stage = graft.Scratch.dir(s"mv_stage_${dir.hashCode.toHexString}")
-    if (!java.nio.file.Files.exists(java.nio.file.Paths.get(stage, "_SUCCESS")))
-      // time-sliced stage files: continuous ingestion arrives roughly in
-      // event-time order, so each micro-batch touches a contiguous band
-      // of days — the shape that makes the MV's partition-pruned merge
-      // pay off (a randomly-shuffled stage makes every batch touch every
-      // day, the pathological worst case for ANY incremental MV)
-      Parquet.read(s, s"$dir/events.parquet")
-        .repartitionByRange(8, col("ts"))
+    // time-sliced stage files: continuous ingestion arrives roughly in
+    // event-time order, so each micro-batch touches a contiguous band
+    // of days — the shape that makes the MV's partition-pruned merge
+    // pay off (a randomly-shuffled stage makes every batch touch every
+    // day, the pathological worst case for ANY incremental MV)
+    val src = s"$dir/events.parquet"
+    val stage = graft.Scratch.derived(s, "mv_stage", Seq(src)) { stage =>
+      Parquet.read(s, src).repartitionByRange(8, col("ts"))
         .write.mode("overwrite").parquet(stage)
+      stage
+    }
     val mvRoot = graft.Scratch.fresh("mv_state")
     val schema = Parquet.read(s, stage).schema
     val stream = s.readStream.schema(schema)
@@ -784,8 +766,8 @@ object Streams {
     * exact: originals classify unique, every planted clone finds its
     * source. */
   def streamIncrementalDedup(s: SparkSession, corpus0: DataFrame,
-      threshold: Double, stageKey: Option[String] = None): DataFrame =
-    streamIngestDedup(s, corpus0, stageKey,
+      threshold: Double, source: Option[String] = None): DataFrame =
+    streamIngestDedup(s, corpus0, source,
       hType = StringType, // md5 hex since r14 (the oracle-replayable collapse hash)
       oSchema = StructType(Seq(StructField("doc_id", LongType),
         StructField("kind", StringType), StructField("dup_of", LongType),
@@ -809,8 +791,8 @@ object Streams {
     * shingle sets instead of raw text (the verify step's input, exactly
     * what a production signature store materializes). */
   def streamIncrementalDedupExact(s: SparkSession, corpus0: DataFrame,
-      stageKey: Option[String] = None): DataFrame =
-    streamIngestDedup(s, corpus0, stageKey,
+      source: Option[String] = None): DataFrame =
+    streamIngestDedup(s, corpus0, source,
       hType = StringType,
       oSchema = StructType(Seq(StructField("doc_id", LongType),
         StructField("kind", StringType), StructField("dup_of", LongType),
@@ -833,7 +815,7 @@ object Streams {
     * batchIds via marker files (q117's idempotency pattern). The twin
     * differs ONLY in the kernel closures it plugs in. */
   private def streamIngestDedup(s: SparkSession, corpus0: DataFrame,
-      stageKey: Option[String],
+      source: Option[String],
       hType: org.apache.spark.sql.types.DataType,
       oSchema: StructType,
       sigFn: DataFrame => DataFrame,
@@ -844,14 +826,9 @@ object Streams {
     import java.nio.file.{Files, Paths}
     val corpus = corpus0.select(col("doc_id"), col("text"))
     // the staged arrival waves are pure functions of the input corpus, so
-    // keyed callers (q142/q211: keyed by sf dir) write them once per JVM —
+    // callers that name its file (q142/q211) write them once per JVM —
     // q117's stage-memo pattern; the INDEX state below is always fresh
-    val stage = stageKey.map(k => graft.Scratch.dir(s"sid_stage_$k"))
-      .getOrElse(graft.Scratch.fresh("sid_stage"))
-    if (!Files.exists(Paths.get(stage, "_staged"))) {
-      // a dir without the marker is a partially-staged leftover: the
-      // append-mode wave writes below are not restartable, so restage
-      stageKey.foreach(k => graft.Scratch.fresh(s"sid_stage_$k"))
+    val stage = staged(s, "sid_stage", source) { stage =>
       // span-derived family offsets (the Dedup r14 rule: constant
       // offsets collided past span 100k — caught by the sf10 law gate)
       val span = graft.llm.Dedup.docSpan(corpus)
@@ -866,7 +843,6 @@ object Streams {
           .select((col("doc_id") + lit(4L * span)).as("doc_id"),
             array_join(reverse(split(col("text"), " ")), " ").as("text")))
       waves.foreach(_.coalesce(1).write.mode("append").parquet(stage))
-      Files.createFile(Paths.get(stage, "_staged"))
     }
     val root = graft.Scratch.fresh("sid_state")
     val idxH = s"$root/idx_h"; val idxB = s"$root/idx_b"
@@ -942,12 +918,9 @@ object Streams {
     * value-cardinality-sized frames — never the fact stream; the final
     * report is q140's broadcast-totals projection over the tiny state. */
   def streamDrift(s: SparkSession, orders0: DataFrame,
-      stageKey: Option[String] = None): DataFrame = withStatePartitions(s, 8) {
+      source: Option[String] = None): DataFrame = withStatePartitions(s, 8) {
     import java.nio.file.{Files, Paths}
-    val stage = stageKey.map(k => graft.Scratch.dir(s"drift_stage_$k"))
-      .getOrElse(graft.Scratch.fresh("drift_stage"))
-    if (!Files.exists(Paths.get(stage, "_staged"))) {
-      stageKey.foreach(k => graft.Scratch.fresh(s"drift_stage_$k"))
+    val stage = staged(s, "drift_stage", source) { stage =>
       val src = orders0.select(col("o_orderkey"), col("o_orderstatus"),
         col("o_orderpriority"),
         (col("o_orderdate") < to_timestamp(lit("1998-01-01"))).as("is_ref"))
@@ -955,8 +928,6 @@ object Streams {
         src.filter(pmod(col("o_orderkey"), lit(4)) === w).drop("o_orderkey")
           .coalesce(1).write.mode("append").parquet(stage)
       }
-      Files.createFile(Paths.get(stage, "_staged"))
-      ()
     }
     val root = graft.Scratch.fresh("drift_state")
     val inSchema = StructType(Seq(StructField("o_orderstatus", StringType),
@@ -1011,7 +982,7 @@ object Streams {
     * monitoring state). */
   private val q148 = Q(
     "q148_stream_drift",
-    (s, dir) => streamDrift(s, T(s, dir, "orders"), Some(dir.hashCode.toHexString)),
+    (s, dir) => streamDrift(s, T(s, dir, "orders"), Some(s"$dir/orders.parquet")),
     graft.ops.Analytics.all.find(_.name == "q140_segment_drift").flatMap(_.oracle),
     "streaming drift monitor: per-batch count folding into versioned state, final TVD == q140's batch answer (monitoring surface)")
 
@@ -1040,13 +1011,9 @@ object Streams {
     * finalization), re-enabled inside this query's scope only —
     * [[withStatePartitions]] disables it for every other stream here. */
   def watermarkLateAudit(s: SparkSession, events0: DataFrame,
-      stageKey: Option[String] = None): DataFrame = withStatePartitions(s, 8) {
-    import java.nio.file.{Files, Paths}
+      source: Option[String] = None): DataFrame = withStatePartitions(s, 8) {
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val stage = stageKey.map(k => graft.Scratch.dir(s"wm_stage_$k"))
-      .getOrElse(graft.Scratch.fresh("wm_stage"))
-    if (!Files.exists(Paths.get(stage, "_staged"))) {
-      stageKey.foreach(k => graft.Scratch.fresh(s"wm_stage_$k"))
+    val stage = staged(s, "wm_stage", source) { stage =>
       val src = events0.select(col("event_id"), col("ts"), col("event_type"))
       (0 until 4).foreach { w =>
         src.filter(pmod(col("event_id"), lit(4)) === w)
@@ -1061,8 +1028,6 @@ object Streams {
         StructType(Seq(StructField("event_id", LongType), StructField("ts",
           org.apache.spark.sql.types.TimestampType), StructField("event_type", StringType))))
       flushRow.coalesce(1).write.mode("append").parquet(stage)
-      Files.createFile(Paths.get(stage, "_staged"))
-      ()
     }
     val inSchema = StructType(Seq(StructField("event_id", LongType),
       StructField("ts", org.apache.spark.sql.types.TimestampType),
@@ -1082,7 +1047,7 @@ object Streams {
 
   private val q154 = Q(
     "q154_watermark_late_audit",
-    (s, dir) => watermarkLateAudit(s, T(s, dir, "events"), Some(dir.hashCode.toHexString)),
+    (s, dir) => watermarkLateAudit(s, T(s, dir, "events"), Some(s"$dir/events.parquet")),
     Some("""WITH a AS (SELECT event_id, ts, event_type, event_id % 4 AS b FROM events),
       bm AS (SELECT b, max(ts) AS mx FROM a GROUP BY b),
       wm AS (SELECT b, max(mx) OVER (ORDER BY b ASC
@@ -1161,7 +1126,7 @@ object Streams {
   private lazy val q142 = Q(
     "q142_stream_incremental_dedup",
     (s, dir) => streamIncrementalDedup(s, T(s, dir, "documents"), 0.8,
-      Some(dir.hashCode.toHexString)),
+      Some(s"$dir/documents.parquet")),
     Some(q142OracleSql),
     "streaming ingest near-dup dedup: per-batch classify vs the self-maintained signature index (prefix arrival semantics, idempotent batches); prefix decisions hash-gated")
 
@@ -1228,7 +1193,7 @@ object Streams {
   private val q211 = Q(
     "q211_stream_incremental_dedup_oracle",
     (s, dir) => streamIncrementalDedupExact(s, T(s, dir, "documents"),
-      Some(dir.hashCode.toHexString)),
+      Some(s"$dir/documents.parquet")),
     Some(q211OracleSql),
     "streaming ingest dedup twin: q142's wave-staged prefix classification with the q210 mod-p kernel — arrival-prefix semantics, index maintenance, and per-wave hot caps all hash-gated")
 

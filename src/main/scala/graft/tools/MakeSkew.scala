@@ -47,10 +47,7 @@ object MakeSkew {
       val dest = java.nio.file.Paths.get(s"$out/$t.parquet")
       java.nio.file.Files.deleteIfExists(dest)
       java.nio.file.Files.move(part.toPath, dest)
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(stage))
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-      finally walk.close()
+      graft.Scratch.rm(new java.io.File(stage))
       println(s"[makeskew] $t: ${Parquet.rowCount(s, dest.toString)} rows")
     }
 

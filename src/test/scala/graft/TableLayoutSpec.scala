@@ -1,8 +1,11 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
+import java.nio.file.{Files, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -11,8 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** [[T.layout]]: a driver table with too few row groups is scanned through
   * a per-JVM copy split into one file of consecutive rows per core; every
-  * other table is read in place. `k` is read from the session the spec
-  * gets, which is whichever session the test JVM built first. */
+  * other table is read in place. The copy is a [[Scratch.derived]] table,
+  * so the memo tests here also cover that helper and the derived tables
+  * of ZoneMap, q115 and q119. `k` is read from the session the spec gets,
+  * which is whichever session the test JVM built first. */
 class TableLayoutSpec extends AnyFunSuite {
 
   private lazy val spark = Sessions.build("local[4]", 4)
@@ -43,9 +48,13 @@ class TableLayoutSpec extends AnyFunSuite {
 
   /** `n` rows of `id` 0 until n as ONE parquet file with one row group,
     * at `<d>/<name>.parquet`. */
-  private def oneFile(d: File, name: String, n: Long): String = {
+  private def oneFile(d: File, name: String, n: Long): String =
+    writeOne(spark.range(n).toDF(), d, name)
+
+  /** `df` as ONE parquet file at `<d>/<name>.parquet`. */
+  private def writeOne(df: DataFrame, d: File, name: String): String = {
     val tmp = new File(Files.createTempDirectory(d.toPath, "tmp").toFile, "out").getPath
-    spark.range(n).coalesce(1).write.parquet(tmp)
+    df.coalesce(1).write.parquet(tmp)
     val part = new File(tmp).listFiles.filter(_.getName.endsWith(".parquet")).head
     val file = new File(d, s"$name.parquet")
     Files.move(part.toPath, file.toPath)
@@ -146,5 +155,100 @@ class TableLayoutSpec extends AnyFunSuite {
         assert(Parquet.read(spark, dir).count() === 600L, dir)
       }
     }
+  }
+
+  private def rowsOf(q: String, dir: String): Set[org.apache.spark.sql.Row] =
+    SparkEntry.queries(q)(spark, dir).collect().toSet
+
+  private def copyTo(from: String, d: File, name: String): Unit = {
+    Files.copy(new File(from).toPath, new File(d, s"$name.parquet").toPath,
+      StandardCopyOption.REPLACE_EXISTING); ()
+  }
+
+  test("fixture copies whose paths differ only in punctuation or share a hashCode get separate derived tables") {
+    assert("/x/Aa".hashCode === "/x/BB".hashCode)
+    withDir { root =>
+      for ((a, b) <- Seq("sf0.001" -> "sf0_001", "Aa" -> "BB")) {
+        // a: the sf0.001 tables; b: sf0.01's orders and events, and half
+        // of the documents (both fixtures hold the same 500 doc ids)
+        val (da, db) = (new File(root, a), new File(root, b))
+        da.mkdir(); db.mkdir()
+        for (t <- Seq("orders", "events", "documents")) copyTo(s"${fixtures(0)}/$t.parquet", da, t)
+        for (t <- Seq("orders", "events")) copyTo(s"${fixtures(1)}/$t.parquet", db, t)
+        writeOne(Parquet.read(spark, s"${fixtures(0)}/documents.parquet")
+          .filter(col("doc_id") < 250), db, "documents")
+        val (za, zb) = (ops.ZoneMap.ensureClustered(spark, da.getPath),
+          ops.ZoneMap.ensureClustered(spark, db.getPath))
+        assert(za !== zb, s"$a $b")
+        assert(Parquet.rowCount(spark, za) === 1500L && Parquet.rowCount(spark, zb) === 15000L, s"$a $b")
+        assert(rowsOf("q115_compaction", da.getPath) === rowsOf("q115_compaction", fixtures(0)), a)
+        assert(rowsOf("q115_compaction", db.getPath) === rowsOf("q115_compaction", fixtures(1)), b)
+        val docs = Seq(da, db).map(d =>
+          rowsOf("q119_leakage_safe_split", d.getPath).toSeq.map(_.getLong(1)).sum)
+        assert(docs === Seq(500L, 250L), s"$a $b")
+      }
+    }
+  }
+
+  test("a rewritten source gets a fresh derived table: ZoneMap's clustered orders") {
+    withDir { d =>
+      copyTo(s"${fixtures(0)}/orders.parquet", d, "orders")
+      val first = ops.ZoneMap.ensureClustered(spark, d.getPath)
+      assert(Parquet.rowCount(spark, first) === 1500L)
+      copyTo(s"${fixtures(1)}/orders.parquet", d, "orders")
+      val second = ops.ZoneMap.ensureClustered(spark, d.getPath)
+      assert(second !== first)
+      assert(Parquet.rowCount(spark, second) === 15000L)
+      assert(ops.ZoneMap.ensureClustered(spark, d.getPath) === second)
+    }
+  }
+
+  test("a build that throws is rebuilt on the next call, in an emptied dir") {
+    intercept[IllegalStateException] {
+      Scratch.derived(spark, "spec_throw", Nil) { d =>
+        assert(new File(d, "partial").createNewFile())
+        throw new IllegalStateException("build failed")
+      }
+    }
+    val built = Scratch.derived(spark, "spec_throw", Nil) { d =>
+      assert(new File(d).list().isEmpty, "a failed build's output must not be read")
+      "rebuilt"
+    }
+    assert(built === "rebuilt")
+    assert(Scratch.derived(spark, "spec_throw", Nil)(_ => "third") === "rebuilt")
+  }
+
+  test("a nested build neither deadlocks nor throws") {
+    withDir { d =>
+      val p = oneFile(d, "nest", 100L * k)
+      // the outer build scans T (whose split copy is itself derived) and
+      // adds enough entries to grow the memo's table while it runs
+      val run = Future {
+        Scratch.derived(spark, "spec_outer", Seq(p)) { _ =>
+          val inner = (1 to 64).map(i => Scratch.derived(spark, "spec_inner", Nil, i)(_ => i))
+          (T(spark, d.getPath, "nest").count(), inner.sum)
+        }
+      }(ExecutionContext.global)
+      assert(Await.result(run, 5.minutes) === ((100L * k, (1 to 64).sum)))
+      assert(Scratch.derived(spark, "spec_inner", Nil, 7)(_ => -1) === 7)
+    }
+  }
+
+  test("no engine source outside graft.Scratch makes a temp file or names a dir by hashCode") {
+    val root = new File("src/main/scala")
+    assert(root.isDirectory, s"${root.getAbsolutePath} not found")
+    val banned =
+      """createTemp(Directory|File)\(|java\.io\.tmpdir|hashCode\.toHexString|toHexString\([^)]*hashCode""".r
+    val walk = Files.walk(root.toPath)
+    val offenders =
+      try walk.iterator.asScala
+        .filter(p => p.toString.endsWith(".scala") && !p.endsWith("graft/Scratch.scala"))
+        .flatMap { p =>
+          Files.readAllLines(p).asScala.zipWithIndex.collect {
+            case (line, i) if banned.findFirstIn(line).nonEmpty => s"$p:${i + 1}: ${line.trim}"
+          }
+        }.toList
+      finally walk.close()
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 }

@@ -12,8 +12,7 @@ class ReprocessSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def frozenState(): Map[String, Long] = {
-    val t = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val root = java.nio.file.Paths.get(graft.Scratch.dir(s"frozen_model_$t"))
+    val root = java.nio.file.Paths.get(Ingest.frozenHistory(spark, dir))
     val s = java.nio.file.Files.list(root)
     try {
       import scala.jdk.CollectionConverters._

@@ -14,9 +14,7 @@ class TakedownSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("untouched partitions are symlink-reused, revoked partition absent, touched rewritten") {
-    Ingest.takedownErase(spark, dir).collect() // materialize the layout
-    val t = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val v2 = java.nio.file.Paths.get(graft.Scratch.dir(s"corpus_erased_$t"))
+    val v2 = java.nio.file.Paths.get(Ingest.erasedCorpus(spark, dir))
     val touched = T(spark, dir, "documents")
       .filter(col("source") === "src3" || col("doc_id") % 97 === 0)
       .select(col("source")).distinct().collect().map(_.getString(0)).toSet

@@ -47,7 +47,7 @@ class GeoTiffSpec extends AnyFunSuite {
   }
 
   test("q72 fixture path is deterministic and parses") {
-    val cells = GeoTiff.readCells(spark, GeoTiff.fixturePath())
+    val cells = GeoTiff.readCells(spark, GeoTiff.fixturePath(spark))
     assert(cells.count() === 20000)
   }
 }

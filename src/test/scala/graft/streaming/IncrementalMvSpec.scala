@@ -77,8 +77,7 @@ class IncrementalMvSpec extends AnyFunSuite {
     val out = graft.SparkEntry.queries("q121_retention")(spark, sf)
     val days = out.collect().map(_.getString(0)).sorted
     assert(days.nonEmpty)
-    val tbl = new java.io.File(
-      graft.Scratch.dir(s"retained_events_${sf.hashCode.toHexString}"), "by_day")
+    val tbl = new java.io.File(graft.ops.Ingest.retainedTable(spark, sf))
     val dirs = tbl.listFiles().filter(_.getName.startsWith("day="))
       .map(_.getName.stripPrefix("day=")).sorted
     assert(dirs.length === days.length, s"layout ${dirs.length} dirs vs ${days.length} result days")
