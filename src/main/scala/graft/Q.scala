@@ -40,8 +40,8 @@ object T {
     * parallelism `k`. Spark splits parquet only at row-group boundaries,
     * and a driver table is one file with one row group, so every scan of
     * it, and every compute-dense operator fused into that scan stage
-    * (point-in-polygon join, NDVI, percentile partials, MinHash), runs as
-    * ONE task. A table whose footers hold fewer than `min(8, k)` row groups
+    * (point-in-polygon join, NDVI arithmetic, MinHash), runs as ONE
+    * task. A table whose footers hold fewer than `min(8, k)` row groups
     * and at least `k` rows is rewritten once per JVM into `k` files of
     * consecutive rows under [[Scratch]], in one single-task pass, and
     * every later scan reads that copy: one task per core, no exchange.
@@ -159,15 +159,16 @@ object Sessions {
       .config("spark.network.timeout", "600s")
       // Object aggregates (percentile, collect_*, sketches, Aggregators)
       // stay in hash mode up to 65,536 keys per task instead of Spark's
-      // 128. Measured at sf0.1 on 4 cores: the NDVI median composite's
-      // one-task percentile partial holds ~4,400 (cell, month) keys, so
-      // at 128 it external-sorted every later row on a string + double +
-      // double + timestamp key, and q68's 100k-row scan+partial stage
-      // took 1.9 s (1.2 s in hash mode). Memory bound: a small percentile
-      // buffer is a 64-slot OpenHashMap, ~1 KB, so 65,536 keys is ~64 MB
-      // per running task (256 MB of a 2 GB heap at 4 cores). Above that
-      // Spark's sort fallback still applies. SCALE.md has the per-query
-      // audit.
+      // 128; past 128 a task external-sorts every later row on its
+      // grouping key. SCALE.md's audit at sf0.1 (4 cores) found 12 queries
+      // past 128: the NDVI median composites (q40, q43, q44, q68, q69,
+      // q74), whose k tasks after the (category, month) exchange hold
+      // ~4,400 to ~28,400 (cell, month) keys between them, and q149,
+      // q155, q162, q179, q185 and q226 (150 to 147,236 keys; q185 stays
+      // past 65,536). Memory bound: a small percentile buffer is a
+      // 64-slot OpenHashMap, ~1 KB, so 65,536 keys is ~64 MB per running
+      // task (256 MB of a 2 GB heap at 4 cores). Above that Spark's sort
+      // fallback still applies.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
       // The `file:` scheme in both Hadoop APIs without child processes
       // (graft/LocalFs.scala). Without libhadoop, Hadoop runs `chmod` per

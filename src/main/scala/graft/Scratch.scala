@@ -58,7 +58,7 @@ object Scratch {
   }
 
   /** A new, uniquely named, empty dir under `dir(name)`; the caller
-    * deletes it with [[rm]]. */
+    * deletes it with [[rm]], or leaves it to the root's shutdown hook. */
   private[graft] def temp(name: String): String =
     java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(dir(name)), "run_").toString
 
@@ -81,13 +81,21 @@ object Scratch {
     * where `ConcurrentHashMap.computeIfAbsent` throws "Recursive update". */
   def derived[V](spark: SparkSession, name: String, sources: Seq[String], params: Any*)(
       build: String => V): V = {
-    val key = (Seq(name) ++ params.map(String.valueOf) ++ sources ++
+    val d = s"${name}_" + digest(spark, sources, name +: params: _*)
+    memo.synchronized(memo.getOrElseUpdate(d, build(fresh(d)))).asInstanceOf[V]
+  }
+
+  /** 20 hex digits of a SHA-256 over `params`, `sources` and every data
+    * file under `sources` (as [[Parquet.files]] lists them) with its
+    * length and mtime: the key of a [[derived]] table, for state that
+    * must be named by its inputs but lives elsewhere (q97's catalog
+    * tables). */
+  def digest(spark: SparkSession, sources: Seq[String], params: Any*): String = {
+    val key = (params.map(String.valueOf) ++ sources ++
       Parquet.files(spark, sources: _*).map(f =>
         s"${f.getPath} ${f.getLen} ${f.getModificationTime}")).mkString("\n")
-    memo.synchronized(memo.getOrElseUpdate(key, {
-      val digest = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      build(fresh(s"${name}_" + digest.take(10).map(b => f"$b%02x").mkString))
-    })).asInstanceOf[V]
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .take(10).map(b => f"$b%02x").mkString
   }
 }

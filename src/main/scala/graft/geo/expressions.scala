@@ -76,11 +76,12 @@ case class StArea(child: Expression) extends UnaryExpression {
 
 /** SparkSessionExtensions hook: injects the native spatial functions into
   * the session's FunctionRegistry, making them available to spark.sql and
-  * `call_function`. Enable with
-  * `.config("spark.sql.extensions", "graft.geo.GraftExtensions")` or
+  * `call_function`, and the [[graft.SmallSort]] query-stage rule. Enable
+  * with `.config("spark.sql.extensions", "graft.geo.GraftExtensions")` or
   * `.withExtensions(new GraftExtensions)`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
+    e.injectQueryStagePrepRule(_ => graft.SmallSort)
     e.injectFunction((
       org.apache.spark.sql.catalyst.FunctionIdentifier("st_contains_point"),
       new ExpressionInfo(classOf[StContainsPoint].getName, "st_contains_point"),

@@ -120,7 +120,7 @@ object Ivf {
     * and the partitioned rewrite and pay only the pruned probe scan. For
     * a frame read from files this is a [[graft.Scratch.derived]] table of
     * its input files; an in-memory frame (no input files — the spec
-    * fixtures) is indexed afresh on every call. */
+    * fixtures) is indexed afresh on every call, each time in a new dir. */
   def builtIndex(emb: DataFrame): (Array[Array[Double]], String) =
     ofInputs(emb, "ivf_idx") { path =>
       val cents = centroidArrays(emb)
@@ -129,10 +129,11 @@ object Ivf {
     }
 
   /** `build` run in a [[graft.Scratch.derived]] dir keyed by `emb`'s input
-    * files and `params`, or in a fresh dir when `emb` has none. */
+    * files and `params`, or in a new dir of its own when `emb` has none:
+    * a caller may still hold an earlier in-memory index's path. */
   private def ofInputs[V](emb: DataFrame, name: String, params: Any*)(build: String => V): V = {
     val files = emb.inputFiles.sorted.toSeq
-    if (files.isEmpty) build(graft.Scratch.fresh(name))
+    if (files.isEmpty) build(graft.Scratch.temp(name))
     else graft.Scratch.derived(emb.sparkSession, name, files, params: _*)(build)
   }
 

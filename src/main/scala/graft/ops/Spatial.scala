@@ -346,18 +346,20 @@ object Spatial {
     * makes a cross-engine oracle compare impossible). */
   private def ndviByMonth(s: SparkSession, sc: DataFrame, parcelsGeo: DataFrame,
       b: Double, months: DataFrame): DataFrame = {
-    // No exchange widens `sc`: r17 hash-spread the rows of q74's 1-task
-    // PIP+partials stage (2.3 s in JobProf) and the exchange cost more than
-    // the wider stage saved (q74 min 2.02→2.35 s, interleaved A/B). The
-    // width comes from the scan instead: q68's scenes derive from `events`,
-    // whose T.layout split copy scans in one task per core (its stage went
-    // 387 → 128 ms at sf0.1, SCALE.md). The percentile PARTIAL aggregate
-    // holds ~4,400 composite keys, past Spark's 128-key object-hash limit;
-    // Sessions.build raises that limit so it no longer external-sorts.
+    // The joined rows cross ONE hash exchange on (category, month) into
+    // k = parallelism tasks; the percentile's partial and final steps and
+    // the category mean then run in that one stage, and no exchange
+    // carries a percentile buffer. Partial aggregation in the scan stage
+    // saved nothing: each task saw ~5 rows per (cell, month) key at sf0.1,
+    // so it shuffled ~1 MB of buffers that AQE coalesced into a ONE-task
+    // merge. The count is explicit because a count-less repartition is
+    // coalescible and AQE would fold it back into one task. At sf0.1 on 4
+    // cores q68's scan stage went 763 → 455 ms of task CPU (SCALE.md).
     val joined = spatialJoin(sc.filter(geeMonthWindow(col("date"))),
       broadcast(parcelsGeo), "cell_lon", "cell_lat", "geom", b)
       .withColumn("ndvi", (col("sr_b5") - col("sr_b4")) / (col("sr_b5") + col("sr_b4")))
       .withColumn("month_ts", date_trunc("month", col("date")))
+      .repartition(s.sparkContext.defaultParallelism, col("keterangan"), col("month_ts"))
     val composited = joined
       .groupBy(col("keterangan"), col("cell_lon"), col("cell_lat"), col("month_ts"))
       .agg(expr("percentile(ndvi, 0.5)").as("ndvi_med"))

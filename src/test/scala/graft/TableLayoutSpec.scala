@@ -190,6 +190,24 @@ class TableLayoutSpec extends AnyFunSuite {
     }
   }
 
+  test("q97's bucketed tables follow the source files: punctuation twins and a rewrite") {
+    withDir { root =>
+      val (da, db) = (new File(root, "sf0.001"), new File(root, "sf0_001"))
+      da.mkdir(); db.mkdir()
+      for (t <- Seq("orders", "lineitem")) {
+        copyTo(s"${fixtures(0)}/$t.parquet", da, t)
+        copyTo(s"${fixtures(1)}/$t.parquet", db, t)
+      }
+      val q97 = "q97_bucketed_join"
+      val (small, large) = (rowsOf(q97, fixtures(0)), rowsOf(q97, fixtures(1)))
+      assert(small !== large)
+      assert(rowsOf(q97, da.getPath) === small)
+      assert(rowsOf(q97, db.getPath) === large)
+      for (t <- Seq("orders", "lineitem")) copyTo(s"${fixtures(1)}/$t.parquet", da, t)
+      assert(rowsOf(q97, da.getPath) === large)
+    }
+  }
+
   test("a rewritten source gets a fresh derived table: ZoneMap's clustered orders") {
     withDir { d =>
       copyTo(s"${fixtures(0)}/orders.parquet", d, "orders")

@@ -18,6 +18,17 @@ class IvfSpec extends AnyFunSuite {
     }.toDF("vec_id", "embedding")
   }
 
+  test("two in-memory indexes keep separate files: each path reads back its own rows") {
+    // in-memory frames have no input files, so neither is a derived table
+    def emb(n: Long) = spark.range(n).selectExpr("id as vec_id",
+      "transform(sequence(1, 8), i -> cast(pmod(id * i, 17) as double)) as embedding")
+    val (_, a) = Ivf.builtIndex(emb(300))
+    val (_, b) = Ivf.builtIndex(emb(500))
+    assert(a !== b)
+    assert(graft.Parquet.read(spark, a).count() === 300)
+    assert(graft.Parquet.read(spark, b).count() === 500)
+  }
+
   test("index covers every vector exactly once, lists within bounds") {
     val idx = Ivf.index(clusteredEmb)
     assert(idx.count() === 100)

@@ -3,7 +3,11 @@ package graft.ops
 import graft.{Sessions, SparkEntry}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Partial}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
@@ -156,29 +160,58 @@ class PlanShapeSpec extends AnyFunSuite {
     case other => other +: other.children.flatMap(finalNodes)
   }
 
-  test("q68/q74 NDVI median composite: object aggregates never fall back to sort") {
-    // the one-task percentile partial holds 773 (cell, month) keys at
-    // sf0.001, past Spark's default 128-key object-hash limit. q74 runs
-    // the composite inside its builder (reportFrom's collect), so the
-    // plans come from a listener that sees every action.
+  /** Every node under `p`, through query stages (pre- and final AQE plans). */
+  private def below(p: SparkPlan): Seq[SparkPlan] = p match {
+    case q: QueryStageExec => q +: below(q.plan)
+    case other => other +: other.children.flatMap(below)
+  }
+
+  test("q68/q74 NDVI median: one (category, month) exchange, no buffer shuffle") {
+    // the joined rows cross one hash exchange into k tasks, where the
+    // percentile's partial and final steps both run: no exchange carries
+    // a percentile buffer, and no task merges them all. q74 runs the
+    // composite inside its builder (reportFrom's collect), so the plans
+    // come from a listener that sees every action.
     val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
         plans.synchronized { plans += qe.executedPlan }
       override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    spark.listenerManager.register(listener)
-    try {
-      for (q <- Seq("q68_ndvi_monthly_oracle", "q74_flagship_oracle"))
+    val k = spark.sparkContext.defaultParallelism
+    for (q <- Seq("q68_ndvi_monthly_oracle", "q74_flagship_oracle")) {
+      plans.synchronized(plans.clear())
+      spark.listenerManager.register(listener)
+      try {
         SparkEntry.queries(q)(spark, dir).collect()
-      org.apache.spark.ListenerBusDrain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    val aggs = plans.synchronized(plans.toList).flatMap(finalNodes)
-      .collect { case a: ObjectHashAggregateExec => a }
-    assert(aggs.exists(_.toString.contains("percentile")), "no percentile aggregate executed")
-    aggs.foreach { a =>
-      assert(a.metrics("numTasksFallBacked").value == 0,
-        s"sort-based fallback in ${a.simpleString(200)}")
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      val nodes = plans.synchronized(plans.toList).flatMap(finalNodes)
+      val aggs = nodes.collect { case a: ObjectHashAggregateExec => a }
+      val medians = aggs.filter(a => a.toString.contains("percentile") &&
+        a.aggregateExpressions.exists(_.mode == Final))
+      assert(medians.nonEmpty, s"$q: no final percentile aggregate executed")
+      medians.foreach { m =>
+        val shuffles = below(m).collect { case e: ShuffleExchangeLike => e.outputPartitioning }
+        assert(shuffles.size == 1, s"$q: expected one exchange under the median, got $shuffles")
+        shuffles.head match {
+          case h: HashPartitioning =>
+            assert(h.numPartitions == k &&
+              h.expressions.map(_.asInstanceOf[AttributeReference].name) ==
+                Seq("keterangan", "month_ts"), s"$q: $h")
+          case other => fail(s"$q: expected hashpartitioning(keterangan, month_ts, $k), got $other")
+        }
+      }
+      nodes.collect { case e: ShuffleExchangeLike => e.child }.foreach {
+        case a: ObjectHashAggregateExec if a.toString.contains("percentile") =>
+          assert(!a.aggregateExpressions.exists(_.mode == Partial),
+            s"$q: an exchange carries percentile buffers of ${a.simpleString(200)}")
+        case _ =>
+      }
+      aggs.foreach { a =>
+        assert(a.metrics("numTasksFallBacked").value == 0,
+          s"$q: sort-based fallback in ${a.simpleString(200)}")
+      }
     }
   }
 
