@@ -365,9 +365,11 @@ object Dedup {
     * dup-free): delta = every 20th doc with 3 appended tokens (near,
     * shingle-Jaccard ≈ 0.9), every 50th verbatim (exact), and a
     * synthetic-unique doc per 100 ids (word-reversed text — shares no
-    * 3-shingle with its source). Rows-only by design (LSH banding is not
-    * SQL-replayable — q101 precedent); DedupSpec pins the exact planted
-    * expectation per kind. */
+    * 3-shingle with its source). Hash-gated directly since r14
+    * ([[q135OracleSql]] replays the production probe), and DedupSpec pins
+    * the exact planted expectation per kind. Its twin q210 runs the same
+    * probe with an integer Jaccard, so its gate also pins the quantized
+    * `jq` the best-match argmax ranks by. */
   private lazy val q135 = Q(
     "q135_incremental_dedup",
     (s, dir) => {
@@ -698,21 +700,23 @@ object Dedup {
   }
 
 
-  /** q25 is rows-only because its shingle/seed hashes are 64-bit
-    * xxhash64/splitmix mixes DuckDB cannot evaluate. (MinHash resemblance
-    * sketch: Broder 1997, "On the resemblance and containment of
-    * documents"; banding analysis: Leskovec/Rajaraman/Ullman, MMDS ch. 3.) q206 runs the
-    * identical pipeline shape — shingle → k seeded mins → banded bucket
-    * self-join → candidate dedup → semi-join verification — in mod-p
-    * arithmetic both engines replay exactly: tokens split on ' ', token
+  /** q206, q25's twin (q25 itself is hash-gated directly since r14, see
+    * [[prodPairsCtes]]). (MinHash resemblance sketch: Broder 1997, "On
+    * the resemblance and containment of documents"; banding analysis:
+    * Leskovec/Rajaraman/Ullman, MMDS ch. 3.) q206 runs the identical
+    * pipeline shape — shingle → k seeded mins → banded bucket self-join
+    * → candidate dedup → semi-join verification — with k = 16 mins in
+    * 4-row bands (q25: 64 mins, 16 bands), in the mod-p arithmetic both
+    * engines replay exactly: tokens split on ' ', token
     * hash = 16-char unrolled Horner base 257 mod 2³¹−1 (absent chars
     * contribute 0 — `ascii(substr(t,j,1))` of an out-of-range position is
     * 0 in DuckDB, matching the padded loop here), shingle value combines
     * the token-triple hashes base 1000003 mod p, and seed s applies
     * (a_s·x + b_s) mod p with a_s/b_s derived from [[planeInt]]. Every
     * intermediate < 2⁶³. Emits ALL banded candidates with their exact
-    * integer (inter, uni) — the hash gate pins the banding decisions AND
-    * the verification arithmetic. 25 pairs at sf0.01 — the same planted
+    * integer (inter, uni), where q25 publishes rounded double Jaccards —
+    * the hash gate pins the k = 16 banding decisions AND the integer
+    * verification arithmetic. 25 pairs at sf0.01 — the same planted
     * near-dup families q25 surfaces. */
   val MinhashK = 16
   val PolyBandRows = 4
@@ -1093,10 +1097,11 @@ object Dedup {
 
   /** q208: the FULL dedup pipeline — candidate pairs → threshold →
     * connected components → canonical keep flags — end-to-end under the
-    * hash gate. q101 (the production capstone) composes xxhash64 MinHash
-    * and is rows-only forever; this twin chains the q206 mod-p pair
-    * kernel (same code path), the Jaccard ≥ 0.7 edge test in integers
-    * (10·inter ≥ 7·uni), and the q82 large-star/small-star components
+    * hash gate. q101 (the production capstone) is hash-gated directly
+    * since r14 on its rounded double Jaccards; this twin chains the q206
+    * pair kernel (k = 16 mins, same code path), the Jaccard ≥ 0.7 edge
+    * test on the integer (inter, uni) (10·inter ≥ 7·uni), and the q82
+    * large-star/small-star components
     * over the resulting edge set, emitting per document its cluster
     * representative and the keep flag a dedup system writes to the
     * catalog. The oracle replays pairs via the q206 SQL and the closure
@@ -1152,10 +1157,11 @@ object Dedup {
 
   // ---- incremental probe kernel under the ORACLE gate ------------------
 
-  /** Mod-p twin of [[deltaSignatures]]: one materialized
-    * (doc_id, h = md5 text, xs = mod-p shingle set) pass per batch —
-    * md5 where production uses xxhash64 (DuckDB evaluates md5), the
-    * q206 shingle arithmetic where production uses 64-bit mixes. */
+  /** Twin of [[deltaSignatures]]: one materialized (doc_id, h = md5
+    * text, xs = mod-p shingle set) pass per batch. Production keeps the
+    * 64 mins (16 bands); this keeps the shingle set, from which
+    * [[indexFramesExact]] derives q206's k = 16 bands and the verify step
+    * of q210/q211 its integer Jaccard, published as `jq`. */
   def deltaSignaturesExact(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), md5(col("text").cast("binary")).as("h"),
       polyShinglesUdf(col("text")).as("xs")).localCheckpoint(false)
@@ -1344,11 +1350,12 @@ object Dedup {
 
   // ---- SimHash under the ORACLE gate (q26's integer-exact twin) --------
 
-  /** q26's 64-bit splitmix SimHash is DuckDB-opaque (Charikar 2002
-    * random-hyperplane rounding; chunk-bucket search: Manku et al. 2007,
-    * "Detecting near-duplicates for web crawling"); q207 is the same
-    * pipeline — per-token fingerprint vote, chunk-bucketed self-join,
-    * hamming verify — over a 30-bit mod-p fingerprint both engines
+  /** q207, q26's twin (q26's 60-bit two-Horner SimHash is hash-gated
+    * directly since r14; Charikar 2002 random-hyperplane rounding;
+    * chunk-bucket search: Manku et al. 2007, "Detecting near-duplicates
+    * for web crawling"): the same pipeline — per-token fingerprint vote,
+    * chunk-bucketed self-join, hamming verify — over the 30-bit mod-p
+    * fingerprint (one Horner base) both engines
     * compute identically: token hash = the q206 16-char Horner, bit j
     * votes Σ(±1) over token OCCURRENCES (multiplicity counts, ties → 0),
     * three 10-bit chunks bucket candidates, and the emitted radius is

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.{Parquet, Q, T}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DecimalType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 
@@ -38,67 +38,84 @@ object Streams {
     else base
   }
 
-  /** Runs `body` with the stateful-stream shuffle-partition count `n`. A
-    * stateful streaming query commits EVERY state-store partition on
-    * EVERY micro-batch (a stream-stream join keeps 4 stores per
-    * partition), so the per-batch commit cost scales with
-    * `spark.sql.shuffle.partitions` regardless of data volume. These
-    * one-shot replays have a handful of micro-batches over modest key
-    * cardinality. The bases (8, or 4 for the outer interval joins) were
-    * tuned at sf0.1 while every checkpoint file written also started
-    * Hadoop child processes (`chmod`, `readlink`; SCALE.md, "Hadoop's
-    * local file system without child processes"); they have not been
-    * re-tuned since graft/LocalFs.scala removed them. A new checkpoint is
-    * created per run, so the partition count is free to differ from the
-    * batch session conf; the session's partition, no-data-batch and
-    * checkpoint settings are restored afterwards. */
-  private def withStatePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
+  /** The one run loop of every replayed stream here. `stream` is written
+    * in `mode` to a memory table under a fresh name, which is returned,
+    * or, given `perBatch`, through that function of each micro-batch and
+    * its id. The query is started and drained; each `between` step (an
+    * end-of-input sentinel append) runs and the query drains again; the
+    * query is stopped in a `finally`.
+    *
+    * State partitions. A stateful streaming query commits EVERY
+    * state-store partition on EVERY micro-batch (a stream-stream join
+    * keeps 4 stores per partition), so the per-batch commit cost scales
+    * with `spark.sql.shuffle.partitions` regardless of data volume. The
+    * run sets it to `parts` ([[stateParts]]; the bases, 8 or 4 for the
+    * outer interval joins, were tuned at sf0.1 while every checkpoint
+    * file also started Hadoop child processes, SCALE.md "Hadoop's local
+    * file system without child processes", and have not been re-tuned
+    * since graft/LocalFs.scala removed them). Work a builder does before
+    * the run (staged inputs, T's split copies, q117's range split) keeps
+    * the session's own count; none of it has a shuffle whose partition
+    * count comes from that conf (`coalesce(1)` writes, global aggregates,
+    * an explicit `repartitionByRange(8, …)`).
+    *
+    * No-data micro-batches exist to advance the watermark so APPEND-MODE
+    * AGGREGATIONS can finalize their windows. Only q154 is one
+    * (`noDataBatches`); every other query's output is complete after the
+    * last DATA batch, and the trailing empty batch only re-commits every
+    * state store. Measured at sf0.1: disabling cut q65 4.5→2.5 s, q73
+    * 1.9→1.2 s, q50 ~25%, q80 neutral. (The RocksDB provider was measured
+    * SLOWER, q65 7.1 s: these one-shot replays carry tiny state, where the
+    * default in-memory store's commit beats native writes.) Both confs
+    * are restored afterwards.
+    *
+    * The checkpoint is a fresh dir under graft.Scratch (tmpfs when
+    * available), deleted after the stop: a one-shot replay re-derives all
+    * state from its staged source, so durability buys nothing, and a
+    * fresh dir keeps the commit protocol identical. Production long-lived
+    * streams put checkpoints on durable storage. */
+  private def drain(s: SparkSession, parts: Int, mode: String,
+      perBatch: Option[(DataFrame, Long) => Unit] = None,
+      between: Seq[() => Unit] = Nil, noDataBatches: Boolean = false)(
+      stream: DataFrame): String = {
     val pKey = "spark.sql.shuffle.partitions"
     val nKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val cKey = "spark.sql.streaming.checkpointLocation"
-    val oldP = s.conf.get(pKey)
-    val oldN = s.conf.get(nKey)
-    val oldC = s.conf.getOption(cKey)
-    // Checkpoint under graft.Scratch (tmpfs when available): these
-    // one-shot replays re-derive all state from the staged source on any
-    // restart, so checkpoint durability buys nothing. A fresh dir per run
-    // (no cross-rep resume; deleted below, or with the scratch root at
-    // exit) keeps the commit protocol identical. The per-batch commit
-    // floor measured on a 4-core VM was not the checkpoint writes but Hadoop starting a `chmod` per
-    // checkpoint file and directory and two `readlink`s per rename;
-    // `Sessions.build` removes those (graft/LocalFs.scala), and q73's
-    // state commit went 0.496 → 0.038 s per pass. Production long-lived
-    // streams put checkpoints on durable storage — that is a recovery
-    // requirement, not part of the operator's cost model.
-    val ckBase = graft.Scratch.temp("ckpt")
-    s.conf.set(cKey, ckBase)
-    // snapshot of already-active queries: anything NEW in the finally
-    // block was started by `body` and may hold state under ckBase — stop
-    // it before the checkpoint dir is deleted (deleting under a live
-    // query corrupts its commit log mid-write)
-    val preActive = s.streams.active.map(_.id).toSet
-    s.conf.set(pKey, n.toString)
-    // No-data micro-batches exist to advance the watermark so APPEND-MODE
-    // AGGREGATIONS can finalize their windows. None of this module's
-    // queries is one (q50 = complete-mode agg, q65 = eager-emit inner
-    // join, q73 = emit-on-arrival dedup, q80 = update-mode state
-    // function): their output is complete after the last DATA batch, and
-    // the trailing empty batch only re-commits every state store.
-    // Measured at sf0.1: disabling cuts q65 4.5→2.5 s, q73 1.9→1.2 s,
-    // q50 ~25%, q80 neutral. (The RocksDB provider was measured SLOWER —
-    // q65 7.1 s — these one-shot replays carry tiny state, where the
-    // default in-memory store's commit beats native writes.) A query that
-    // DOES add an append-mode aggregation must restore the default.
-    s.conf.set(nKey, "false")
-    try body finally {
+    val (oldP, oldN) = (s.conf.get(pKey), s.conf.get(nKey))
+    val ck = graft.Scratch.temp("ckpt")
+    val name = s"stream_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    s.conf.set(pKey, parts.toString)
+    s.conf.set(nKey, noDataBatches.toString)
+    try {
+      val w = stream.writeStream.outputMode(mode).option("checkpointLocation", ck)
+      val q = perBatch.fold(w.format("memory").queryName(name))(w.foreachBatch(_)).start()
+      try {
+        q.processAllAvailable()
+        between.foreach { step => step(); q.processAllAvailable() }
+      } finally q.stop()
+      name
+    } finally {
       s.conf.set(pKey, oldP); s.conf.set(nKey, oldN)
-      oldC.fold(s.conf.unset(cKey))(v => s.conf.set(cKey, v))
-      // if body threw (or forgot to stop) with a query still running, stop
-      // it before deleting its checkpoint out from under it
-      s.streams.active.filterNot(q => preActive.contains(q.id))
-        .foreach(q => try q.stop() catch { case _: Throwable => () })
-      graft.Scratch.rm(new java.io.File(ckBase))
+      graft.Scratch.rm(new java.io.File(ck))
     }
+  }
+
+  /** The events file of `dir` replayed as a stream under its raw schema
+    * (`ts` a long under nanosAsLong, not T()'s converted one), then
+    * normalized by [[graft.Ts.norm]]. The file source watches a
+    * directory, so it reads `dir` filtered to that one file. */
+  private def eventsStream(s: SparkSession, dir: String): DataFrame =
+    s.readStream.schema(Parquet.read(s, s"$dir/events.parquet").schema)
+      .option("pathGlobFilter", "events.parquet").parquet(dir)
+      .transform(graft.Ts.norm)
+
+  /** A fresh dir holding a symlink to the events file `src`: the source
+    * of a stream whose end-of-input sentinel rows are appended beside it
+    * (q80 and the interval joins). */
+  private def eventsStage(src: String): String = {
+    val stage = java.nio.file.Paths.get(graft.Scratch.fresh("events_stage"))
+    java.nio.file.Files.createSymbolicLink(
+      stage.resolve("events.parquet"), java.nio.file.Paths.get(src))
+    stage.toString
   }
 
   /** The staged input of a replayed stream, written by `write` into an
@@ -114,26 +131,14 @@ object Streams {
 
   /** Run a tumbling-window streaming aggregation to completion over the
     * events parquet and return the final (complete-mode) result. */
-  def streamTumblingHour(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
-    // raw schema (ts = long under nanosAsLong), NOT T()'s converted one
-    val schema = Parquet.read(s, s"$dir/events.parquet").schema
-    // the file streaming source monitors a DIRECTORY; point it at sfDir
-    // restricted to the events file
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .transform(graft.Ts.norm)
-    val agg = stream
+  def streamTumblingHour(s: SparkSession, dir: String): DataFrame = {
+    val agg = eventsStream(s, dir)
       .groupBy(window(col("ts"), "1 hour").as("w"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
       .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("n_events"), col("sum_value"))
-    val name = s"stream_tumbling_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(name).orderBy(asc_nulls_first("hour"))
+    s.table(drain(s, stateParts(dir, 8), "complete")(agg)).orderBy(asc_nulls_first("hour"))
   }
 
   private val q50 = Q(
@@ -150,23 +155,14 @@ object Streams {
     * map-side inside the micro-batch, state is one aggregate row per open
     * window (4× the tumbling count, still window-spine-sized, never
     * event-sized). Complete-mode memory sink holds aggregate rows only. */
-  def streamHoppingWindow(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
-    val schema = Parquet.read(s, s"$dir/events.parquet").schema
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .transform(graft.Ts.norm)
-    val agg = stream
+  def streamHoppingWindow(s: SparkSession, dir: String): DataFrame = {
+    val agg = eventsStream(s, dir)
       .groupBy(window(col("ts"), "1 hour", "15 minutes").as("w"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
       .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("wstart"),
         col("n_events"), col("sum_value"))
-    val name = s"stream_hopping_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(name).orderBy(asc_nulls_first("wstart"))
+    s.table(drain(s, stateParts(dir, 8), "complete")(agg)).orderBy(asc_nulls_first("wstart"))
   }
 
   private val q109 = Q(
@@ -225,15 +221,11 @@ object Streams {
   /** Stateful streaming: running per-user event counts via
     * mapGroupsWithState (update mode) — the KeyValueGroupedDataset state
     * API over the replayed events stream. */
-  def statefulUserCounts(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
+  def statefulUserCounts(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val schema = Parquet.read(s, s"$dir/events.parquet").schema
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .select(col("user_id"))
-      .as[Long]
-    val counted = stream.groupByKey(identity)
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+    val counted = eventsStream(s, dir).select(col("user_id")).as[Long]
+      .groupByKey(identity)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
         (user: Long, rows: Iterator[Long], state: GroupState[Long]) =>
           val total = state.getOption.getOrElse(0L) + rows.size
@@ -241,149 +233,110 @@ object Streams {
           (user, total)
       }
       .toDF("user_id", "n_events")
-    val name = s"stateful_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = counted.writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(name).groupBy(col("user_id"))
+    s.table(drain(s, stateParts(dir, 8), "update")(counted)).groupBy(col("user_id"))
       .agg(max(col("n_events")).as("n_events"))
       .orderBy(asc_nulls_first("user_id"))
   }
 
-  /** Stream-stream interval join: "trades" joined to all same-user
-    * "quotes" in a 24 h lookback, both sides replayed as watermarked
-    * streams (the state-bounding shape: watermark + time-range condition
-    * lets Spark drop quote state older than the bound).
+  /** The trade/quote interval join behind q65/q214 (inner), q168/q223
+    * (left outer) and q198/q224 (full outer): each "trade" (event_id ≡ 0
+    * mod 5) joined to every same-user "quote" (the other events, narrowed
+    * by `quoteFilter`) in its 24 h lookback, both sides replayed as
+    * watermarked streams (watermark + time-range condition lets Spark drop
+    * quote state older than the bound). Timestamps are second-truncated:
+    * events.ts carries sub-µs precision Spark floors on read, so the bound
+    * must sit at a granularity the DuckDB oracle agrees on.
     *
-    * Scale shape: the raw (trade, quote) pair stream is NEVER collected —
-    * each micro-batch is partial-aggregated per trade inside foreachBatch
-    * and the (trade_id, n, sum) partials appended to parquet; the final
-    * pass merges partials. Append-mode join output emits each pair exactly
-    * once across batches, so sum-of-partials is exact; decimal partials
-    * keep the merge order-independent. (The previous shape drained the
-    * unaggregated pair stream into a driver-resident memory sink —
-    * unbounded driver memory at scale, and the slowest bench query.)
-    * Timestamps are second-truncated — events.ts carries sub-µs precision
-    * Spark floors on read, so the join bound must sit at a granularity the
-    * DuckDB oracle agrees on. */
-  /** The state-bucket width knob shared by the three interval joins.
-    * A trade's 24 h lookback window [t−24h, t] spans at most
-    * ceil(24/bucketHours)+1 consecutive buckets, so the trade side
-    * probes exactly that many trailing buckets; each qualifying
-    * (trade, quote) pair materializes in EXACTLY the quote's own bucket
-    * (the quote's ts lies inside the trade's window, hence inside a
-    * probed bucket), so the answer is bucket-width-invariant. Narrower
-    * buckets = more state keys per hot entity (finer parallelism) at
-    * the cost of proportionally more trade probe rows — the per-key
-    * state bound is one entity's event rate × (bucketHours + 24 h);
-    * see SCALE.md. */
-  private def probeCount(bucketHours: Int): Int = {
+    * State is sharded on (user, bucketHours-wide time bucket), never the
+    * bare user key. The skew fixture measured why: a user holding ~23% of
+    * all events makes a bare-key join's per-key matching quadratic in ONE
+    * task (24.4 s vs 1.9 s at sf0.1, ~2.9 M of 3 M pairs in one state
+    * partition), and AQE cannot re-plan streaming state. A trade's window
+    * [t−24h, t] spans at most ceil(24/bucketHours)+1 consecutive buckets,
+    * so the trade side probes exactly those; each qualifying pair
+    * materializes in EXACTLY the quote's own bucket, so the matches are
+    * bucket-width-invariant (q214/q223/q224 run width 12 h against the
+    * 24 h queries' oracles). Narrower buckets mean more state keys per hot
+    * entity at the cost of more trade probe rows: the per-key state bound
+    * is one entity's event rate × (bucketHours + 24 h); see SCALE.md.
+    *
+    * The (trade, quote) pair stream is never collected: each micro-batch's
+    * `out` columns go through `partial`, appended to parquet, and the
+    * caller merges the returned partials (append-mode join output emits
+    * each pair once, and decimal partials keep the merge
+    * order-independent).
+    *
+    * An outer join emits a null-padded row only when the watermark passes
+    * its eviction bound, so a bounded replay pushes the watermark past
+    * every real row at end of input: two sentinel rounds (one trade and one
+    * surviving quote each, user_id −1 so they join nothing) are appended
+    * as extra micro-batches, two because the watermark is computed from
+    * the PREVIOUS batch's max event time. The outer joins run on 4 state
+    * partitions, not 8: they keep 4 state stores per partition on BOTH
+    * sides and re-commit them across the two flushes, so the fixed commit
+    * cost dominates (measured at sf0.1, local[8], warm: q168 6.3 s →
+    * 4.6 s, q198 10.0 s → 5.0 s going 8 → 4). */
+  private def intervalJoin(s: SparkSession, dir: String, bucketHours: Int,
+      how: String, quoteFilter: Option[Column], out: Seq[String])(
+      partial: DataFrame => DataFrame): DataFrame = {
     require(bucketHours >= 1 && bucketHours <= 24,
       s"bucketHours must be in [1, 24], got $bucketHours")
-    math.ceil(24.0 / bucketHours).toInt
-  }
-
-  /** Row budget one (user, bucket) state key may hold before the width
-    * heuristic narrows the bucket: ~256k quote rows ≈ 13 MB of state and
-    * a bounded per-key match loop — comfortable for one state-store
-    * partition at executor-memory scale. */
-  val DefaultStateKeyRowBudget: Long = 1L << 18
-
-  /** Derive `bucketHours` from the observed hot-entity event rate —
-    * SCALE.md's "shrink width until rate × (bucketHours + 24 h) fits one
-    * state partition" rule as a function instead of an operator's-manual
-    * note. The manual knob on the three interval joins stays as override;
-    * any derived width returns q65/q168/q198's exact answers by the
-    * width-invariance law (gated by q214/q223/q224 and
-    * `BucketedOuterJoinSpec`).
-    *
-    * The hot rate comes from one CMS sketch pass over (user, hour) keys —
-    * the q77 heavy-hitter machinery: map-combinable, sketch-sized driver
-    * state, no exact per-key shuffle at plan time. The hottest key's
-    * hourly count is upper-bounded WITHOUT enumerating candidates: every
-    * key adds its full count to exactly one cell per CMS row, so each
-    * row's max cell ≥ the hottest key's count, and the min over rows
-    * tightens collision inflation. Over-estimate ⇒ narrower buckets ⇒
-    * finer state sharding — errs on the safe side.
-    *
-    * Returns the WIDEST width in [1, 24] whose per-key state bound
-    * `hotHourly × (width + 24 h lookback)` fits the budget (wider = fewer
-    * trade probe rows, so narrow only when the hot key forces it); floors
-    * at 1 h when even that does not fit — the scheme's finest shard. */
-  def deriveBucketHours(s: SparkSession, dir: String,
-      maxRowsPerStateKey: Long = DefaultStateKeyRowBudget): Int = {
-    import s.implicits._
-    import graft.llm.Sketches
-    val tokens = T(s, dir, "events").select(concat_ws(":",
-      col("user_id").cast("string"),
-      floor(unix_micros(date_trunc("second", col("ts"))) /
-        lit(3600L * 1000000L)).cast("string")).as("value"))
-    val cms = tokens.as[String].select(Sketches.cmsAgg.toColumn).head()
-    val hotHourly = (0 until Sketches.Depth)
-      .map(r => cms.slice(r * Sketches.Width, (r + 1) * Sketches.Width).max)
-      .min
-    (24 to 1 by -1).find(w => hotHourly * (w + 24L) <= maxRowsPerStateKey)
-      .getOrElse(1)
-  }
-
-  private def bucketExpr(bucketHours: Int) =
-    floor(expr("unix_micros(cast(tss as timestamp))") /
+    val probes = math.ceil(24.0 / bucketHours).toInt
+    def bucket = floor(expr("unix_micros(cast(tss as timestamp))") /
       (bucketHours.toLong * 3600L * 1000000L)).cast("long")
-
-  private def probeExplode(bucketHours: Int) =
-    explode(array((0 to probeCount(bucketHours)).map(i => col("tb") - lit(i.toLong)): _*))
-
-  /** Stream-stream INNER interval join, state sharded on
-    * (user, bucketHours-wide time bucket) — never the bare user key.
-    * The skew fixture measured why sharding is mandatory: a user holding
-    * ~23% of all events makes a bare-key join's per-key matching
-    * quadratic in ONE task (24.4 s vs 1.9 s at sf0.1 — ~2.9 M of 3 M
-    * pairs in one state partition), and AQE cannot re-plan streaming
-    * state. With the bucket in the equi-key, one hot entity's quote
-    * state shards across its active buckets; the interval predicate is
-    * unchanged, so the answer (and the q65 oracle) is identical by
-    * construction for EVERY width — q214 gates that invariance by
-    * running width 12 h against the same oracle. At 100×, shrink
-    * bucketHours until rate × (bucketHours + 24 h) rows fit one state
-    * partition. */
-  def streamIntervalJoin(s: SparkSession, dir: String,
-      bucketHours: Int = 24): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
-    val schema = Parquet.read(s, s"$dir/events.parquet").schema
-    def src = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val src0 = s"$dir/events.parquet"
+    val schema = Parquet.read(s, src0).schema
+    val stage = eventsStage(src0)
+    def src = s.readStream.schema(schema).parquet(stage)
       .transform(graft.Ts.norm).withColumn("tss", date_trunc("second", col("ts")))
     val trades = src.filter(pmod(col("event_id"), lit(5)) === 0)
       .select(col("event_id").as("trade_id"), col("user_id"),
-        col("tss").as("t_ts"), bucketExpr(bucketHours).as("tb"))
-      .withColumn("jb", probeExplode(bucketHours))
+        col("tss").as("t_ts"), bucket.as("tb"))
+      .withColumn("jb", explode(array((0 to probes).map(i => col("tb") - lit(i.toLong)): _*)))
       .withWatermark("t_ts", "25 hours")
-    val quotes = src.filter(pmod(col("event_id"), lit(5)) =!= 0)
+    val isQuote = pmod(col("event_id"), lit(5)) =!= 0
+    val quotes = src.filter(quoteFilter.fold(isQuote)(isQuote && _))
       .select(col("event_id").as("quote_id"), col("user_id").as("q_user"),
-        col("tss").as("q_ts"), col("value").as("qval"),
-        bucketExpr(bucketHours).as("qb"))
+        col("tss").as("q_ts"), col("value").as("qval"), bucket.as("qb"))
       .withWatermark("q_ts", "25 hours")
     val joined = trades.join(quotes,
       col("user_id") === col("q_user") && col("jb") === col("qb") &&
         col("q_ts") >= col("t_ts") - expr("interval 24 hours") &&
-        col("q_ts") <= col("t_ts"))
-      .select(col("trade_id"), col("qval"))
-    val partialsDir = graft.Scratch.fresh("ij_partials")
-    val q = joined.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.groupBy(col("trade_id"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("qval").cast(DecimalType(18, 2))).as("s"))
-          .write.mode("append").parquet(partialsDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    Parquet.read(s, partialsDir)
-      .groupBy(col("trade_id"))
-      .agg(sum(col("n")).as("n_quotes"),
-        sum(col("s")).cast(DoubleType).as("sum_qval"))
-      .orderBy(asc_nulls_first("trade_id"))
+        col("q_ts") <= col("t_ts"), how)
+      .select(out.map(col): _*)
+    val outer = how != "inner"
+    lazy val maxTs = graft.Ts.maxNanos(s, src0)
+    // event_id −5 lands in the trade branch (pmod 0), −1 in the quote
+    // branch (pmod 4, value passes the ≥ 8 filter); one write task, not
+    // one per defaultParallelism slice of range()
+    def sentinel(i: Int): Unit = {
+      val farNs = maxTs + (4000L + i) * 3600L * 1000000000L
+      s.range(0, 2, 1, 1).select(schema.fields.map { f =>
+        f.name match {
+          case "event_id" => when(col("id") === 0, lit(-5L)).otherwise(lit(-1L)).as("event_id")
+          case "ts" => graft.Ts.litNanos(schema, farNs).as("ts")
+          case "user_id" => lit(-1L).as("user_id")
+          case "value" => lit(9.99).as("value")
+          case other => lit(null).cast(f.dataType).as(other)
+        }
+      }: _*).write.mode("append").parquet(stage)
+    }
+    val partials = graft.Scratch.fresh(s"${how}_join_partials")
+    drain(s, stateParts(dir, if (outer) 4 else 8), "append",
+      perBatch = Some((b, _) => partial(b).write.mode("append").parquet(partials)),
+      between = if (outer) Seq(1, 2).map(i => () => sentinel(i)) else Nil)(joined)
+    Parquet.read(s, partials)
   }
+
+  /** Stream-stream INNER interval join ([[intervalJoin]]): per trade, the
+    * number and decimal sum of its matched quotes. */
+  def streamIntervalJoin(s: SparkSession, dir: String, bucketHours: Int = 24): DataFrame =
+    intervalJoin(s, dir, bucketHours, "inner", None, Seq("trade_id", "qval")) {
+      _.groupBy(col("trade_id"))
+        .agg(count(lit(1)).as("n"), sum(col("qval").cast(DecimalType(18, 2))).as("s"))
+    }.groupBy(col("trade_id"))
+      .agg(sum(col("n")).as("n_quotes"), sum(col("s")).cast(DoubleType).as("sum_qval"))
+      .orderBy(asc_nulls_first("trade_id"))
 
   private val q65 = Q(
     "q65_stream_interval_join",
@@ -417,7 +370,7 @@ object Streams {
     * deterministically from doc_id — the driver corpus carries no
     * timestamp. */
   def streamDedup(s: SparkSession, dir: String,
-      horizon: String = "1 hour"): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
+      horizon: String = "1 hour"): DataFrame = {
     val schema = Parquet.read(s, s"$dir/documents.parquet").schema
     val outDir = graft.Scratch.fresh("dedup_out")
     val deduped = s.readStream.schema(schema)
@@ -427,13 +380,8 @@ object Streams {
       .withWatermark("ts", horizon)
       .dropDuplicatesWithinWatermark("hash")
       .select(col("doc_id"), col("hash"))
-    val q = deduped.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    drain(s, stateParts(dir, 8), "append",
+      perBatch = Some((b, _) => b.write.mode("append").parquet(outDir)))(deduped)
     // Layout-invariant result: the streaming pass decides the dedup SET
     // (which hashes survive the watermark horizon — the stateful
     // semantics under test), but dropDuplicatesWithinWatermark's
@@ -488,17 +436,14 @@ object Streams {
     * user's final real session; the sentinel's own open session is never
     * emitted. This is the replay-determinism variant of production's
     * event-time timeout. */
-  def streamSessionize(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
+  def streamSessionize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val gapUs = 1800L * 1000000L
     val src = s"$dir/events.parquet"
     val schema = Parquet.read(s, src).schema
-    // staging dir: symlink the events file, sentinel file appended later
-    val stage = java.nio.file.Paths.get(graft.Scratch.fresh("sess_stage"))
-    java.nio.file.Files.createSymbolicLink(
-      stage.resolve("events.parquet"), java.nio.file.Paths.get(src))
-    val stream = s.readStream.schema(schema).parquet(stage.toString)
+    val stage = eventsStage(src)
+    val stream = s.readStream.schema(schema).parquet(stage)
       .select(col("user_id"),
         graft.Ts.microsCol(schema).as("ts_us"),
         (col("value").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
@@ -519,14 +464,10 @@ object Streams {
           if (cur != null) state.update(cur)
           out.iterator
       }
-    val name = s"sess_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = sessions.toDF().writeStream.outputMode("update")
-      .format("memory").queryName(name).start()
-    try {
-      q.processAllAvailable()
-      // sentinel file: one gap-breaking row per user closes the last session
+    // sentinel file: one gap-breaking row per user closes the last session
+    def sentinel(): Unit = {
       val maxTs = graft.Ts.maxNanos(s, src)
-      val sentinel = Parquet.read(s, src).select(col("user_id")).distinct()
+      Parquet.read(s, src).select(col("user_id")).distinct()
         .select(schema.fields.map { f =>
           f.name match {
             case "user_id" => col("user_id")
@@ -536,10 +477,10 @@ object Streams {
             case other => lit(null).cast(f.dataType).as(other)
           }
         }: _*)
-      sentinel.coalesce(1).write.mode("append").parquet(stage.toString)
-      q.processAllAvailable()
-    } finally q.stop()
-    s.table(name)
+        .coalesce(1).write.mode("append").parquet(stage)
+    }
+    s.table(drain(s, stateParts(dir, 8), "update", between = Seq(() => sentinel()))(
+        sessions.toDF()))
       .select(col("user_id"), col("sess_id"), col("n_events"),
         (col("cents") / 100.0).as("sum_value"),
         col("start_us"), col("end_us"))
@@ -575,24 +516,16 @@ object Streams {
     * the only stateful operator is the complete-mode aggregate, whose
     * state is dimension-sized (25 nations). This is exactly the 100 TB
     * enrichment shape: the fact stream never shuffles for the join. */
-  def streamStaticEnrich(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
+  def streamStaticEnrich(s: SparkSession, dir: String): DataFrame = {
     val dim = T(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
       .join(broadcast(T(s, dir, "nation").select(col("n_nationkey"), col("n_name"))),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name"))
-    val schema = Parquet.read(s, s"$dir/events.parquet").schema
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-      .transform(graft.Ts.norm)
-    val agg = stream.join(broadcast(dim), col("user_id") === col("c_custkey"))
+    val agg = eventsStream(s, dir).join(broadcast(dim), col("user_id") === col("c_custkey"))
       .groupBy(col("n_name"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
-    val name = s"stream_static_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(name).orderBy(asc_nulls_first("n_name"))
+    s.table(drain(s, stateParts(dir, 8), "complete")(agg)).orderBy(asc_nulls_first("n_name"))
   }
 
   private val q114 = Q(
@@ -699,7 +632,7 @@ object Streams {
     * merge order-independent, so batch boundaries cannot change the
     * result. At 100 TB the per-batch work is O(batch + touched MV
     * partitions); the full-scan equivalent is O(history) per refresh. */
-  def incrementalMv(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
+  def incrementalMv(s: SparkSession, dir: String): DataFrame = {
     // time-sliced stage files: continuous ingestion arrives roughly in
     // event-time order, so each micro-batch touches a contiguous band
     // of days — the shape that makes the MV's partition-pruned merge
@@ -712,16 +645,11 @@ object Streams {
       stage
     }
     val mvRoot = graft.Scratch.fresh("mv_state")
-    val schema = Parquet.read(s, stage).schema
-    val stream = s.readStream.schema(schema)
+    val stream = s.readStream.schema(Parquet.read(s, stage).schema)
       .option("maxFilesPerTrigger", "2").parquet(stage)
       .transform(graft.Ts.norm)
-    val q = stream.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mvMergeBatch(s, mvRoot, batch, batchId)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    drain(s, stateParts(dir, 8), "append",
+      perBatch = Some((b, id) => mvMergeBatch(s, mvRoot, b, id)))(stream)
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(mvRoot, "_applied")))
       // zero-batch stage: the MV was never materialized — empty, typed
       s.sql("SELECT '' AS event_type, '' AS day, 0L AS n_events, 0D AS sum_value")
@@ -783,11 +711,11 @@ object Streams {
 
   /** q211: [[streamIncrementalDedup]]'s EXACT twin — the identical
     * streaming harness ([[streamIngestDedup]]: same four staged waves,
-    * same per-batch index append, same idempotency markers), with the
-    * mod-p probe kernel ([[graft.llm.Dedup.classifyAgainstIndexExact]])
-    * in place of the 64-bit one, so the PREFIX semantics themselves —
-    * every doc classified against exactly what arrived before it — sit
-    * under the DuckDB hash gate. The aux index holds (doc_id, xs)
+    * same per-batch index append, same idempotency markers), with q210's
+    * probe kernel ([[graft.llm.Dedup.classifyAgainstIndexExact]]): k = 16
+    * bands and an integer Jaccard, published as `jq`. q142 is hash-gated
+    * directly too (since r14); the twin's gate adds the integer `jq` the
+    * best-match argmax ranks by. The aux index holds (doc_id, xs)
     * shingle sets instead of raw text (the verify step's input, exactly
     * what a production signature store materializes). */
   def streamIncrementalDedupExact(s: SparkSession, corpus0: DataFrame,
@@ -822,7 +750,7 @@ object Streams {
       auxFn: (DataFrame, DataFrame) => DataFrame,
       classifyFn: (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) => DataFrame,
       indexHB: DataFrame => (DataFrame, DataFrame),
-      auxSchema: Option[StructType] = None): DataFrame = withStatePartitions(s, 8) {
+      auxSchema: Option[StructType] = None): DataFrame = {
     import java.nio.file.{Files, Paths}
     val corpus = corpus0.select(col("doc_id"), col("text"))
     // the staged arrival waves are pure functions of the input corpus, so
@@ -854,9 +782,8 @@ object Streams {
     def readOrEmpty(path: String, schema: StructType) =
       if (Files.exists(Paths.get(path))) s.read.schema(schema).parquet(path)
       else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val q = s.readStream.schema(corpus.schema).option("maxFilesPerTrigger", "1").parquet(stage)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
+    val stream = s.readStream.schema(corpus.schema).option("maxFilesPerTrigger", "1").parquet(stage)
+    drain(s, 8, "append", perBatch = Some { (batch0, batchId) =>
         val marker = Paths.get(root, "_applied", batchId.toString)
         if (!Files.exists(marker)) {
           // one materialization, three consumers; LAZY since r16 — the
@@ -896,9 +823,7 @@ object Streams {
           Files.createFile(marker)
           ()
         }
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      })(stream)
     s.read.schema(oSchema).parquet(outDir).orderBy(asc_nulls_first("doc_id"))
   }
 
@@ -918,7 +843,7 @@ object Streams {
     * value-cardinality-sized frames — never the fact stream; the final
     * report is q140's broadcast-totals projection over the tiny state. */
   def streamDrift(s: SparkSession, orders0: DataFrame,
-      source: Option[String] = None): DataFrame = withStatePartitions(s, 8) {
+      source: Option[String] = None): DataFrame = {
     import java.nio.file.{Files, Paths}
     val stage = staged(s, "drift_stage", source) { stage =>
       val src = orders0.select(col("o_orderkey"), col("o_orderstatus"),
@@ -939,9 +864,8 @@ object Streams {
       if (v >= 0 && Files.exists(Paths.get(s"$root/v$v")))
         s.read.schema(stSchema).parquet(s"$root/v$v")
       else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stSchema)
-    val q = s.readStream.schema(inSchema).option("maxFilesPerTrigger", "1").parquet(stage)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val stream = s.readStream.schema(inSchema).option("maxFilesPerTrigger", "1").parquet(stage)
+    drain(s, 8, "append", perBatch = Some { (batch, batchId) =>
         val marker = Paths.get(root, "_applied", batchId.toString)
         if (!Files.exists(marker)) {
           val batchCounts = batch
@@ -958,9 +882,7 @@ object Streams {
           Files.createFile(marker)
           ()
         }
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      })(stream)
     val applied = Option(Paths.get(root, "_applied").toFile.list())
       .map(_.map(_.toLong)).getOrElse(Array.empty[Long])
     val counts = readState(if (applied.isEmpty) -1L else applied.max)
@@ -1008,11 +930,9 @@ object Streams {
     * Scale shape: one watermarked tumbling aggregation (state =
     * window×type cardinality); the audit adds nothing beyond the agg
     * itself. Requires the final no-data micro-batch (append-mode
-    * finalization), re-enabled inside this query's scope only —
-    * [[withStatePartitions]] disables it for every other stream here. */
+    * finalization), which [[drain]] keeps for this query only. */
   def watermarkLateAudit(s: SparkSession, events0: DataFrame,
-      source: Option[String] = None): DataFrame = withStatePartitions(s, 8) {
-    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+      source: Option[String] = None): DataFrame = {
     val stage = staged(s, "wm_stage", source) { stage =>
       val src = events0.select(col("event_id"), col("ts"), col("event_type"))
       (0 until 4).foreach { w =>
@@ -1032,16 +952,14 @@ object Streams {
     val inSchema = StructType(Seq(StructField("event_id", LongType),
       StructField("ts", org.apache.spark.sql.types.TimestampType),
       StructField("event_type", StringType)))
-    val name = "wm_late_audit"
-    val q = s.readStream.schema(inSchema).option("maxFilesPerTrigger", "1").parquet(stage)
+    val counts = s.readStream.schema(inSchema).option("maxFilesPerTrigger", "1").parquet(stage)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
       .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
         col("event_type"), col("cnt"))
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
-    s.table(name).filter(col("event_type") =!= "__flush")
+    s.table(drain(s, 8, "append", noDataBatches = true)(counts))
+      .filter(col("event_type") =!= "__flush")
       .orderBy(asc_nulls_first("window_start"), asc_nulls_first("event_type"))
   }
 
@@ -1197,105 +1115,29 @@ object Streams {
     Some(q211OracleSql),
     "streaming ingest dedup twin: q142's wave-staged prefix classification with the q210 mod-p kernel — arrival-prefix semantics, index maintenance, and per-wave hot caps all hash-gated")
 
-  /** Stream-stream LEFT OUTER interval join — q65's missing-side
-    * completion: trades with NO qualifying quote in the 24 h lookback
-    * must still emit (with nulls), which an inner join silently drops.
-    * Spark emits the null-padded row only when the watermark passes the
-    * trade's eviction bound, so a bounded replay needs the watermark
-    * pushed past ALL real rows at end-of-stream: two sentinel files
-    * (one trade + one surviving quote each, user_id −1 so they join
-    * nothing) are appended as extra micro-batches — two, because the
-    * watermark is computed from the PREVIOUS batch's max event time.
-    * This is the replay-determinism variant of production's continuous
-    * arrival (same pattern as q80's sentinel).
+  /** Stream-stream LEFT OUTER interval join ([[intervalJoin]]) — q65's
+    * missing-side completion: trades with NO qualifying quote in the 24 h
+    * lookback still emit (with nulls), which an inner join silently
+    * drops; the sentinel flush makes Spark emit them by end of input.
     *
-    * State shards on (user, bucketHours bucket) exactly like
-    * [[streamIntervalJoin]]. The bucketing is sound for the inner
-    * matches (a pair materializes in exactly the quote's own bucket),
-    * but an exploded trade holds probeCount+1 left-side state rows, so
-    * a bucket with no qualifying quote emits a spurious null row even
-    * when ANOTHER bucket matched. The reconciliation is the aggregation
-    * the query already publishes: per-trade `count(qval)` / `sum(qval)`
-    * ignore nulls, so a matched trade's stray null rows contribute
-    * nothing and a globally unmatched trade's all-null rows still read
-    * (0, NULL) — LEFT JOIN aggregate semantics hold with zero extra
-    * passes, at any bucket width (q223 gates width 12 h on q168's
-    * oracle).
-    *
-    * Scale shape: state bounded by watermark + the time-range
-    * condition, per-batch partial aggregation in foreachBatch (the raw
-    * pair stream is never driver-resident), decimal partials merged
-    * exactly. */
-  // 4 state partitions, not the module's usual 8: the OUTER joins keep 4
-  // state stores per partition on BOTH sides and re-commit them across the
-  // two sentinel flush batches, so the fixed commit cost dominates —
-  // measured at sf0.1 (local[8], warm): q168 6.3 s → 4.6 s, q198
-  // 10.0 s → 5.0 s going 8 → 4.
-  def streamLeftOuterJoin(s: SparkSession, dir: String,
-      bucketHours: Int = 24): DataFrame = withStatePartitions(s, stateParts(dir, 4)) {
-    val src0 = s"$dir/events.parquet"
-    val schema = Parquet.read(s, src0).schema
-    val stage = java.nio.file.Paths.get(graft.Scratch.fresh("loj_stage"))
-    java.nio.file.Files.createSymbolicLink(
-      stage.resolve("events.parquet"), java.nio.file.Paths.get(src0))
-    def src = s.readStream.schema(schema).parquet(stage.toString)
-      .transform(graft.Ts.norm).withColumn("tss", date_trunc("second", col("ts")))
-    val trades = src.filter(pmod(col("event_id"), lit(5)) === 0)
-      .select(col("event_id").as("trade_id"), col("user_id"),
-        col("tss").as("t_ts"), bucketExpr(bucketHours).as("tb"))
-      .withColumn("jb", probeExplode(bucketHours))
-      .withWatermark("t_ts", "25 hours")
-    val quotes = src.filter(pmod(col("event_id"), lit(5)) =!= 0 && col("value") >= 8.0)
-      .select(col("event_id").as("quote_id"), col("user_id").as("q_user"),
-        col("tss").as("q_ts"), col("value").as("qval"),
-        bucketExpr(bucketHours).as("qb"))
-      .withWatermark("q_ts", "25 hours")
-    val joined = trades.join(quotes,
-      col("user_id") === col("q_user") && col("jb") === col("qb") &&
-        col("q_ts") >= col("t_ts") - expr("interval 24 hours") &&
-        col("q_ts") <= col("t_ts"),
-      "leftOuter")
-      .select(col("trade_id"), col("qval"))
-    val partialsDir = graft.Scratch.fresh("loj_partials")
-    val q = joined.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.groupBy(col("trade_id"))
-          .agg(count(col("qval")).as("n"),
-            sum(col("qval").cast(DecimalType(18, 2))).as("s"))
-          .write.mode("append").parquet(partialsDir)
-        ()
-      }
-      .start()
-    try {
-      q.processAllAvailable()
-      val maxTs = graft.Ts.maxNanos(s, src0)
-      for (i <- 1 to 2) {
-        val farNs = maxTs + (4000L + i) * 3600L * 1000000000L
-        // two rows: event_id −5 lands in the trade branch (pmod 0), −1 in
-        // the quote branch (pmod 4, value passes the ≥8 filter); user −1
-        // matches nothing on either side
-        // range(start, end, step, numPartitions=1): the default slices by
-        // defaultParallelism, paying ~31 empty write tasks per sentinel
-        val sentinel = s.range(0, 2, 1, 1).select(schema.fields.map { f =>
-          f.name match {
-            case "event_id" => when(col("id") === 0, lit(-5L)).otherwise(lit(-1L)).as("event_id")
-            case "ts" => graft.Ts.litNanos(schema, farNs).as("ts")
-            case "user_id" => lit(-1L).as("user_id")
-            case "value" => lit(9.99).as("value")
-            case other => lit(null).cast(f.dataType).as(other)
-          }
-        }: _*)
-        sentinel.write.mode("append").parquet(stage.toString)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    Parquet.read(s, partialsDir)
-      .filter(col("trade_id") >= 0)
+    * Bucketing is sound for the inner matches, but an exploded trade
+    * holds one left-side state row per probed bucket, so a bucket with no
+    * qualifying quote emits a spurious null row even when ANOTHER bucket
+    * matched. The published per-trade `count(qval)` / `sum(qval)` ignore
+    * nulls, so a matched trade's stray null rows contribute nothing and a
+    * globally unmatched trade's all-null rows still read (0, NULL): LEFT
+    * JOIN aggregate semantics hold with zero extra passes, at any bucket
+    * width (q223 gates width 12 h on q168's oracle). */
+  def streamLeftOuterJoin(s: SparkSession, dir: String, bucketHours: Int = 24): DataFrame =
+    intervalJoin(s, dir, bucketHours, "leftOuter", Some(col("value") >= 8.0),
+        Seq("trade_id", "qval")) {
+      _.groupBy(col("trade_id"))
+        .agg(count(col("qval")).as("n"), sum(col("qval").cast(DecimalType(18, 2))).as("s"))
+    }.filter(col("trade_id") >= 0)
       .groupBy(col("trade_id"))
       .agg(sum(col("n")).cast(LongType).as("n_quotes"),
         sum(col("s")).cast(DoubleType).as("sum_qval"))
       .orderBy(asc_nulls_first("trade_id"))
-  }
 
   private val q168 = Q(
     "q168_stream_left_outer_join",
@@ -1311,94 +1153,35 @@ object Streams {
       GROUP BY t.trade_id ORDER BY trade_id ASC NULLS FIRST"""),
     "stream-stream LEFT OUTER interval join on the (user, 24h-bucket)-sharded state path: unmatched trades emit null-padded on watermark passage (sentinel-flushed at end-of-stream); oracle is the batch LEFT JOIN")
 
-  /** q198: stream-stream FULL OUTER interval join — the last cell of the
-    * streaming join matrix (q65 inner, q168 left): BOTH sides' unmatched
-    * rows emit null-padded when the watermark passes their eviction
-    * bound — unmatched quotes surface here, which even the left join
-    * silently drops. Same sentinel end-of-stream flush as q168 (both
-    * branches carry a sentinel row; both excluded from the partials).
-    * The result is the reconciliation summary: matched pairs, orphans
-    * per side, and value totals — exactly the audit a trade/quote (or
+  /** q198: stream-stream FULL OUTER interval join ([[intervalJoin]]) —
+    * the last cell of the streaming join matrix (q65 inner, q168 left):
+    * BOTH sides' unmatched rows emit null-padded when the watermark passes
+    * their eviction bound, so unmatched quotes surface here, which even
+    * the left join drops. Both sentinel rows are excluded from the
+    * partials. The result is the reconciliation summary: matched pairs,
+    * orphans per side, and value totals, the audit a trade/quote (or
     * clickstream/conversion) reconciliation job publishes. Oracle is the
     * batch FULL JOIN aggregated the same way.
     *
-    * State shards on (user, bucketHours bucket) like
-    * [[streamIntervalJoin]]. Quote-side orphan semantics survive
-    * sharding EXACTLY (a quote lives in one bucket and every potential
-    * pair materializes in that bucket, so null-trade rows are true
-    * orphans); the trade side needs reconciliation: an exploded trade
-    * emits a null-quote row per matchless BUCKET, so "unmatched trade"
-    * must be decided on the trade's TOTAL match count, not row-shape.
-    * The per-batch partials are therefore trade-KEYED (trade_id,
-    * matches, matched value) plus a global quote-orphan row; the final
-    * pass counts trades whose summed matches are zero. One extra
-    * trade-cardinality aggregation buys per-bucket state parallelism
-    * under hot entities, at any width (q224 gates width 12 h on q198's
+    * Quote-side orphans survive bucketing EXACTLY (a quote lives in one
+    * bucket and every potential pair materializes there, so null-trade
+    * rows are true orphans); the trade side needs reconciliation: an
+    * exploded trade emits a null-quote row per matchless BUCKET, so
+    * "unmatched trade" is decided on the trade's TOTAL match count, not
+    * row shape. The per-batch partial is therefore ONE table grouped on
+    * the NULLABLE trade key: a (trade_id, matches, matched value) row per
+    * trade, plus one null-trade group whose count(quote_id)/sum(qval) are
+    * the batch's quote orphans. The final pass counts trades whose summed
+    * matches are zero, at any width (q224 gates width 12 h on q198's
     * oracle). */
-  def streamFullOuterJoin(s: SparkSession, dir: String,
-      bucketHours: Int = 24): DataFrame = withStatePartitions(s, stateParts(dir, 4)) {
-    val src0 = s"$dir/events.parquet"
-    val schema = Parquet.read(s, src0).schema
-    val stage = java.nio.file.Paths.get(graft.Scratch.fresh("foj_stage"))
-    java.nio.file.Files.createSymbolicLink(
-      stage.resolve("events.parquet"), java.nio.file.Paths.get(src0))
-    def src = s.readStream.schema(schema).parquet(stage.toString)
-      .transform(graft.Ts.norm).withColumn("tss", date_trunc("second", col("ts")))
-    val trades = src.filter(pmod(col("event_id"), lit(5)) === 0)
-      .select(col("event_id").as("trade_id"), col("user_id"),
-        col("tss").as("t_ts"), bucketExpr(bucketHours).as("tb"))
-      .withColumn("jb", probeExplode(bucketHours))
-      .withWatermark("t_ts", "25 hours")
-    val quotes = src.filter(pmod(col("event_id"), lit(5)) =!= 0 && col("value") >= 8.0)
-      .select(col("event_id").as("quote_id"), col("user_id").as("q_user"),
-        col("tss").as("q_ts"), col("value").as("qval"),
-        bucketExpr(bucketHours).as("qb"))
-      .withWatermark("q_ts", "25 hours")
-    val joined = trades.join(quotes,
-      col("user_id") === col("q_user") && col("jb") === col("qb") &&
-        col("q_ts") >= col("t_ts") - expr("interval 24 hours") &&
-        col("q_ts") <= col("t_ts"),
-      "fullOuter")
-      .select(col("trade_id"), col("quote_id"), col("qval"))
-    val pDir = graft.Scratch.fresh("foj_partials")
-    // ONE partial table per batch, grouped on the NULLABLE trade key
-    // (r17; guide §2.4/§2.6): groupBy puts the quote-orphan rows (null
-    // trade_id) in one group whose count(quote_id)/sum(qval) ARE the old
-    // qDir aggregates, so the former persist + two write jobs per batch
-    // fold into a single write job — same rows, same filters, the final
-    // pass splits on trade_id nullness instead of reading two dirs.
-    val q = joined.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.filter((col("trade_id").isNotNull && col("trade_id") >= 0) ||
-            (col("trade_id").isNull && col("quote_id") >= 0))
-          .groupBy(col("trade_id"))
-          .agg(count(col("quote_id")).as("n"),
-            sum(col("qval").cast(DecimalType(18, 2))).as("s"))
-          .write.mode("append").parquet(pDir)
-        ()
-      }
-      .start()
-    try {
-      q.processAllAvailable()
-      val maxTs = graft.Ts.maxNanos(s, src0)
-      for (i <- 1 to 2) {
-        val farNs = maxTs + (4000L + i) * 3600L * 1000000000L
-        // range(start, end, step, numPartitions=1): the default slices by
-        // defaultParallelism, paying ~31 empty write tasks per sentinel
-        val sentinel = s.range(0, 2, 1, 1).select(schema.fields.map { f =>
-          f.name match {
-            case "event_id" => when(col("id") === 0, lit(-5L)).otherwise(lit(-1L)).as("event_id")
-            case "ts" => graft.Ts.litNanos(schema, farNs).as("ts")
-            case "user_id" => lit(-1L).as("user_id")
-            case "value" => lit(9.99).as("value")
-            case other => lit(null).cast(f.dataType).as(other)
-          }
-        }: _*)
-        sentinel.write.mode("append").parquet(stage.toString)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val parts = Parquet.read(s, pDir)
+  def streamFullOuterJoin(s: SparkSession, dir: String, bucketHours: Int = 24): DataFrame = {
+    val parts = intervalJoin(s, dir, bucketHours, "fullOuter", Some(col("value") >= 8.0),
+        Seq("trade_id", "quote_id", "qval")) {
+      _.filter((col("trade_id").isNotNull && col("trade_id") >= 0) ||
+          (col("trade_id").isNull && col("quote_id") >= 0))
+        .groupBy(col("trade_id"))
+        .agg(count(col("quote_id")).as("n"), sum(col("qval").cast(DecimalType(18, 2))).as("s"))
+    }
     val perTrade = parts.filter(col("trade_id").isNotNull)
       .groupBy(col("trade_id"))
       .agg(sum(col("n")).as("n"), sum(col("s")).as("s"))
@@ -1406,10 +1189,8 @@ object Streams {
       sum(col("n")).as("n_pairs"),
       sum(when(col("n") === 0, 1L).otherwise(0L)).as("n_unmatched_trades"),
       sum(col("s")).cast(DoubleType).as("matched_value"))
-    // the null-trade group: count(quote_id) counted exactly the orphan
-    // quote rows per batch, sum(qval) their value — the old qDir partials.
-    // coalesce: the old per-batch GLOBAL aggregate emitted a (0, null) row
-    // even with zero orphans, so the count reads 0 (not null) either way.
+    // coalesce: a batch with zero orphans writes no null-trade row, so
+    // the count reads 0, not null
     val qAgg = parts.filter(col("trade_id").isNull).agg(
       coalesce(sum(col("n")), lit(0L)).as("n_unmatched_quotes"),
       sum(col("s")).cast(DoubleType).as("orphan_value"))
@@ -1465,15 +1246,10 @@ object Streams {
     * double-inserted cross-day duplicate, or a broken cap merge shifts θ
     * or the retained count and breaks the hash. Exact distinct rides
     * along (q162's pattern) to expose the estimation error. */
-  def streamKmvDistinct(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
+  def streamKmvDistinct(s: SparkSession, dir: String): DataFrame = {
     import graft.llm.Sketches
-    val schema = Parquet.read(s, s"$dir/events.parquet").schema
-    val stream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-      .transform(graft.Ts.norm)
     val kmvU = udaf(Sketches.kmvAggRows, org.apache.spark.sql.Encoders.scalaLong)
-    val daily = stream
+    val daily = eventsStream(s, dir)
       .filter(assert_true(abs(col("user_id")) < lit(2147483648L),
         lit("user_id magnitude >= 2^31: kmv hash product would overflow int64")).isNull)
       .select(col("event_type"),
@@ -1482,13 +1258,9 @@ object Streams {
           % lit(Sketches.KmvP)).as("h"))
       .groupBy(col("event_type"), col("day"))
       .agg(kmvU(col("h")).as("sk"))
-    val name = s"stream_kmv_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = daily.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
     // n_types × n_days sketch rows, ≤ K longs each — sketch-sized by
     // construction (the q225 bounded-collect rationale)
-    val rows = s.table(name).collect()
+    val rows = s.table(drain(s, stateParts(dir, 8), "complete")(daily)).collect()
     val merged = rows.groupBy(_.getString(0)).toSeq.map { case (t, rs) =>
       val sk = rs.map(_.getAs[scala.collection.Seq[Long]]("sk").toArray)
         .foldLeft(Array.emptyLongArray)(Sketches.kmvMerge)

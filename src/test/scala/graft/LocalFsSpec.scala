@@ -18,7 +18,7 @@ import scala.jdk.CollectionConverters._
   * on a streaming and a compaction query. */
 class LocalFsSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = TestSession.spark
   private lazy val conf = spark.sparkContext.hadoopConfiguration
   private lazy val fs = FileSystem.get(new URI("file:///"), conf)
 

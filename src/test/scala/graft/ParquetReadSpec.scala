@@ -19,7 +19,7 @@ import scala.jdk.CollectionConverters._
   * and no engine source reads parquet any other way. */
 class ParquetReadSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = TestSession.spark
   private val fixtures = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
   private val tables = Seq("customer", "documents", "embeddings", "events",
     "lineitem", "nation", "orders", "part", "region", "supplier")

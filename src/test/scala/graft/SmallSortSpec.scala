@@ -15,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * single-partition exchange, with no range-bounds sampling job. */
 class SmallSortSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = TestSession.spark
   private val minSize = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 
   /** A few hundred rows of aggregates over 20,000 input rows in four

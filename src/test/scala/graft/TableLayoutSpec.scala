@@ -20,7 +20,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * which is whichever session the test JVM built first. */
 class TableLayoutSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = TestSession.spark
   private def k = spark.sparkContext.defaultParallelism
   private def wide = math.min(8, k)
   private val fixtures = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")

@@ -1,6 +1,5 @@
 package graft.geo
 
-import graft.Sessions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * agreement with the UDF implementation. */
 class ExpressionSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
 
   test("registered in SQL via GraftExtensions") {
     import spark.implicits._

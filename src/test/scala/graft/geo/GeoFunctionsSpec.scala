@@ -1,6 +1,5 @@
 package graft.geo
 
-import graft.Sessions
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The registered SQL UDF surface (GeoFunctions.register): every st_*
@@ -9,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class GeoFunctionsSpec extends AnyFunSuite {
 
   private lazy val spark = {
-    val s = Sessions.build("local[4]", 4)
+    val s = graft.TestSession.spark
     GeoFunctions.register(s)
     s
   }

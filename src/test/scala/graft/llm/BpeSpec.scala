@@ -1,11 +1,10 @@
 package graft.llm
 
-import graft.Sessions
 import org.scalatest.funsuite.AnyFunSuite
 
 class BpeSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
 
   test("first merges are the most frequent pairs, deterministically") {
     import spark.implicits._

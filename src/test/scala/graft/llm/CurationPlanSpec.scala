@@ -1,6 +1,5 @@
 package graft.llm
 
-import graft.Sessions
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape gates for the curation module — each pins the physical
@@ -16,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     the two-level path is physical, not a single-partition window. */
 class CurationPlanSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   private def planOf(name: String): Vector[String] = {

@@ -1,6 +1,5 @@
 package graft.llm
 
-import graft.Sessions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     bigram stream scores the uniform floor. */
 class CurationSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
 
   test("semDedup drops exactly the larger id of each planted near-dup pair at tau=0.95") {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft.llm
 
-import graft.Sessions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * these tests prove the detectors actually fire). */
 class DedupSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = Sessions.build("local[8]", 8)
+  private lazy val spark: SparkSession = graft.TestSession.spark
 
   private def docsDf(rows: Seq[(Long, String)]) = {
     import spark.implicits._

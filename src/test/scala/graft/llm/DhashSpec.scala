@@ -1,6 +1,5 @@
 package graft.llm
 
-import graft.Sessions
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q227's kernel laws: the dHash chunks, the BMP decode boundary, and the
@@ -57,7 +56,7 @@ class DhashSpec extends AnyFunSuite {
   }
 
   test("q227 pairs: planted exact + near dups found, short docs excluded") {
-    val spark = Sessions.build("local[4]", 4)
+    val spark = graft.TestSession.spark
     import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog and keeps going " * 3
     // derive a perturbation the KERNEL scores at ham 1..3 (a single-char

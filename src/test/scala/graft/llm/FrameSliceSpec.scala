@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Sessions, SparkEntry}
+import graft.SparkEntry
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q222's kernel laws: the char-space frame slicer must reproduce
@@ -46,7 +46,7 @@ class FrameSliceSpec extends AnyFunSuite {
   }
 
   test("q222 query: 4 frames per sampled doc, counts partition frames") {
-    val spark = Sessions.build("local[4]", 4)
+    val spark = graft.TestSession.spark
     val rows = SparkEntry.queries("q222_frame_slice_oracle")(
       spark, "/root/testdata/sf0.001").collect()
     assert(rows.nonEmpty)

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Sessions, T}
+import graft.T
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * place of a SQL oracle. */
 class IvfPqSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
   private def vecs(): Array[(Long, Array[Double])] =

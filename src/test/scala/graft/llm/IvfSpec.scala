@@ -1,11 +1,10 @@
 package graft.llm
 
-import graft.Sessions
 import org.scalatest.funsuite.AnyFunSuite
 
 class IvfSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[8]", 8)
+  private lazy val spark = graft.TestSession.spark
 
   private def clusteredEmb = {
     import spark.implicits._

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Sessions, SparkEntry}
+import graft.SparkEntry
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * of the JL projection and the record-linkage decision on driver data. */
 class JlLinkageSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[8]", 8)
+  private lazy val spark = graft.TestSession.spark
   private val dir = "/root/testdata/sf0.01"
 
   test("q230: JL projection preserves pairwise distance in expectation (ratio_ppm ~ 1e6)") {

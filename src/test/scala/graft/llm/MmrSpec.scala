@@ -1,6 +1,5 @@
 package graft.llm
 
-import graft.Sessions
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Closed-form checks for MMR re-ranking: the planted case where pure
@@ -8,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * duplicate for the diverse hit, plus tie-break and kernel edge rules. */
 class MmrSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
 
   test("mmrSelect drops the near-duplicate in favor of the diverse candidate") {
     // anchor = e0. v1 and v2 are IDENTICAL (rel .8, mutual sim 1.0);

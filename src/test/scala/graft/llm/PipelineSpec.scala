@@ -1,6 +1,5 @@
 package graft.llm
 
-import graft.Sessions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     docs carry a position. */
 class PipelineSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
   private val sf = "/root/testdata/sf0.001"
   private val cap = 4096L
 

@@ -1,6 +1,5 @@
 package graft.llm
 
-import graft.Sessions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,7 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PpjoinSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 8)
+  private lazy val spark = graft.TestSession.spark
 
   private val K = 24 // clone-cluster size
 

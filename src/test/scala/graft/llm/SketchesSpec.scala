@@ -1,11 +1,10 @@
 package graft.llm
 
-import graft.Sessions
 import org.scalatest.funsuite.AnyFunSuite
 
 class SketchesSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
 
   test("CMS estimate is one-sided: never undercounts, bounded overcount") {
     val cms = new Array[Long](Sketches.Depth * Sketches.Width)

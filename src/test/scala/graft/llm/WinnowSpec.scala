@@ -1,6 +1,5 @@
 package graft.llm
 
-import graft.Sessions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * local guarantee and the containment detector built on it (q92). */
 class WinnowSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = Sessions.build("local[8]", 8)
+  private lazy val spark: SparkSession = graft.TestSession.spark
 
   private val K = Dedup.WinnowK
   private val W = Dedup.WinnowW

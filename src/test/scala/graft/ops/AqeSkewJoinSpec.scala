@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.Sessions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * final adaptive plan must mark the sort-merge join as skew-handled. */
 class AqeSkewJoinSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
 
   test("AQE splits the hot partition of a skewed sort-merge join") {
     import spark.implicits._

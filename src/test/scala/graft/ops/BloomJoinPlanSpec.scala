@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.Sessions
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan gate for q118: with broadcast off (the cluster-scale case) and the
@@ -12,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * drifting across Spark upgrades). */
 class BloomJoinPlanSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   test("q118 optimized plan contains a bloom might_contain runtime filter") {

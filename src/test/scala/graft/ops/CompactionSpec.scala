@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.Sessions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and in-file ordering. */
 class CompactionSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   test("compaction: ≤4 files, per-file ts ranges disjoint, rows preserved") {

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.Sessions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -28,7 +27,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class FlagshipGoldenSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
 
   private def goldenCsv = graft.Reference.file("results/summary_report.csv")
   private val team = "Dinas Pertanahan dan Penataan Ruang Kota Balikpapan"

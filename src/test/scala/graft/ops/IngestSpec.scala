@@ -1,12 +1,11 @@
 package graft.ops
 
-import graft.Sessions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class IngestSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
 
   test("csv scan infers the reference dim schema (1 row)") {
     val dim = Ingest.readCsv(spark, graft.Reference.file("data/lu.csv"))

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.Sessions
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Kernel tests for the native Jaro-Winkler expression. Expected values
@@ -65,7 +64,7 @@ class JaroWinklerSpec extends AnyFunSuite {
   }
 
   test("SQL surface: codegen expression agrees with the kernel") {
-    val spark = Sessions.build("local[2]", 2)
+    val spark = graft.TestSession.spark
     import spark.implicits._
     val rows = Seq(("MARTHA", "MARHTA"), ("DWAYNE", "DUANE"), ("fly", "ant"))
       .toDF("a", "b")

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.Sessions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * driver and fails fast past the cap instead of OOMing. */
 class ManifestSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
 
   private def layout(nFiles: Int): String = {
     import spark.implicits._

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Sessions, SparkEntry}
+import graft.SparkEntry
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
@@ -19,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * strategy or widens a scan fails the build — not just the bench. */
 class PlanShapeSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
   private def planOf(name: String): String =

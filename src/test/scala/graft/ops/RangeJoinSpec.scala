@@ -1,12 +1,11 @@
 package graft.ops
 
-import graft.Sessions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class RangeJoinSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
 
   test("bucketized range join equals brute-force BETWEEN join") {
     val pts = spark.range(5000).select(

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.Sessions
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The refresh property the q199 oracle cannot see: repeated runs leave
@@ -8,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * mtimes) — only the hot window recomputes. */
 class ReprocessSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
   private def frozenState(): Map[String, Long] = {

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Sessions, SparkEntry}
+import graft.SparkEntry
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fixture-scale arithmetic; these pin hand-checkable laws. */
 class SeedDistanceSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[8]", 8)
+  private lazy val spark = graft.TestSession.spark
 
   test("path graph distances from one seed, capped at the hop budget") {
     import spark.implicits._

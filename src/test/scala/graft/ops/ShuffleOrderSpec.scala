@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.Sessions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * across runs and partitionings (epoch reproducibility). */
 class ShuffleOrderSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
 
   test("positions are a bijection onto 0..n-1") {
     val ids = spark.range(0, 3000).select(col("id").as("doc_id"))

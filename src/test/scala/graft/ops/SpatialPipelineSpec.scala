@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Sessions, SparkEntry}
+import graft.SparkEntry
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (SURVEY.md §5 test strategy, item 5). */
 class SpatialPipelineSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = Sessions.build("local[8]", 8)
+  private lazy val spark: SparkSession = graft.TestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
   test("contract: every oracleSql key has a matching queries entry") {

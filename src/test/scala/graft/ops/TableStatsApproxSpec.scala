@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Sessions, SparkEntry}
+import graft.SparkEntry
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q131 has no DuckDB oracle (cross-engine HLL sketches can't
@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * assertion is stable, not flaky. */
 class TableStatsApproxSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   test("approx ANALYZE: exact columns equal, NDV within 10% of exact") {

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Sessions, T}
+import graft.T
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * hold real (non-link) files. */
 class TakedownSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
   test("untouched partitions are symlink-reused, revoked partition absent, touched rewritten") {

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.Sessions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * guarantees on adversarial shapes the driver corpus doesn't contain). */
 class TextPipelineSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[8]", 8)
+  private lazy val spark = graft.TestSession.spark
 
   // ---- q106 greedy packing -------------------------------------------
 

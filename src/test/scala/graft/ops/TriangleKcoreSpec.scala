@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.Sessions
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * graph semantics on known topologies. */
 class TriangleKcoreSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[8]", 8)
+  private lazy val spark = graft.TestSession.spark
 
   private def edges(es: (Int, Int)*): DataFrame = {
     import spark.implicits._

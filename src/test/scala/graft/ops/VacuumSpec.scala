@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Sessions, T}
+import graft.T
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * version dir is deleted as a LINK (its target survives). */
 class VacuumSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
   test("vacuum removes superseded versions, keeps current, spares symlink targets") {

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{Sessions, T}
+import graft.T
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * a subsequent clean publish flips it atomically. */
 class WapSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
   test("dirty refresh is rejected, pointer stays on the prior version, clean publish flips it") {

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.Sessions
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Closed-form checks for q157's PPS systematic sampler: exact output
@@ -8,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * heavy document, and determinism across runs. */
 class WeightedSampleSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
 
   private def sample(weights: Seq[(Long, Long)], k: Int): Seq[(Long, Long)] = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.Sessions
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The XXH64 algorithm [[XxSql]] transcribes to DuckDB SQL, pinned
@@ -11,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * transcription, instead of as an opaque oracle mismatch. */
 class XxSqlSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[2]", 2)
+  private lazy val spark = graft.TestSession.spark
 
   test("spark xxhash64(long, int-salt) matches the transcribed algorithm's goldens") {
     // goldens captured from spark.sql("SELECT xxhash64(id, <salt>) ...")

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.Sessions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * principles, independent of the aggregate downstream). */
 class ZoneMapSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
   private val fromUs = 788918400000000L // 1995-01-01T00:00:00Z

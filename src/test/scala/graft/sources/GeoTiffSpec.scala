@@ -1,11 +1,10 @@
 package graft.sources
 
-import graft.Sessions
 import org.scalatest.funsuite.AnyFunSuite
 
 class GeoTiffSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
 
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory("geotiff_spec_")

@@ -1,6 +1,5 @@
 package graft.sources
 
-import graft.Sessions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (results/summary_report.csv) — SURVEY.md §5 items 2 and 5. */
 class GpkgSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
   private def path = graft.Reference.file("data/lu.gpkg")
 
   test("sqlite reader: schema lists the lu layer") {

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.Sessions
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Width-invariance of the (user, time-bucket)-sharded interval joins:
@@ -20,7 +19,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * matched in one, matched in none — sf0.001 has 46 matchless trades). */
 class BucketedOuterJoinSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
   private val dir = "/root/testdata/sf0.001"
 
   test("inner interval join is bucket-width-invariant (24h vs 7h)") {
@@ -56,30 +55,6 @@ class BucketedOuterJoinSpec extends AnyFunSuite {
     // trade-keyed zero-match detection and the quote-orphan pass both ran
     assert(w24.getLong(1) > 0L, "no unmatched trades in fixture")
     assert(w24.getLong(2) > 0L, "no unmatched quotes in fixture")
-  }
-
-  test("deriveBucketHours picks the widest width whose state bound fits, and joins green at it") {
-    // generous budget: nothing forces narrowing → the 24 h default
-    assert(Streams.deriveBucketHours(spark, dir, maxRowsPerStateKey = Long.MaxValue) === 24)
-    // impossible budget: even 1 h doesn't fit → floors at the finest shard
-    assert(Streams.deriveBucketHours(spark, dir, maxRowsPerStateKey = 0L) === 1)
-    // the real heuristic on the fixture: monotone in the budget, in range
-    val derived = Streams.deriveBucketHours(spark, dir)
-    assert(derived >= 1 && derived <= 24)
-    // hotHourly on sf0.001 is tiny, so the default budget must not narrow
-    assert(derived === 24)
-    // an intermediate budget that forces narrowing: hotHourly ≥ 1 on any
-    // non-empty fixture, so budget 30 admits w ≤ 6 when hotHourly == 1,
-    // narrower when hotter — and whatever width comes out, the join
-    // answer is unchanged (the width-invariance law, exercised here at a
-    // DERIVED width rather than a hand-picked one)
-    val narrow = Streams.deriveBucketHours(spark, dir, maxRowsPerStateKey = 30L)
-    assert(narrow < 24)
-    val w24 = Streams.streamIntervalJoin(spark, dir).collect()
-    val wd = Streams.streamIntervalJoin(spark, dir, bucketHours = narrow).collect()
-    def key(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(key(wd) == key(w24))
   }
 
   test("bucketHours outside [1, 24] is rejected loudly") {

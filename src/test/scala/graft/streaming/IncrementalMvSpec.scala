@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.Sessions
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q117's oracle proves the FINAL MV equals the batch aggregate; this
@@ -11,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * directories (facts the content-only oracle cannot see). */
 class IncrementalMvSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
   private def batchDf(rows: Seq[(String, String, Double)]) = {

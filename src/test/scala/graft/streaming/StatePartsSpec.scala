@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.Sessions
 import java.io.{File, RandomAccessFile}
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * of MB are written. */
 class StatePartsSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
 
   private val MB = 1L << 20
 
@@ -74,6 +73,7 @@ class StatePartsSpec extends AnyFunSuite {
   }
 
   test("a streaming query restores the session's partition, no-data-batch and checkpoint conf") {
+    // every registered streaming query, each stopped when it returns
     val keys = Seq(
       "spark.sql.shuffle.partitions",
       "spark.sql.streaming.noDataMicroBatches.enabled",
@@ -85,9 +85,11 @@ class StatePartsSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
       spark.conf.set("spark.sql.streaming.checkpointLocation", ck.getPath)
       val before = snapshot
-      val rows = Streams.streamTumblingHour(spark, "/root/testdata/sf0.001").collect()
-      assert(rows.nonEmpty)
-      assert(snapshot === before)
+      for (q <- Streams.all) {
+        assert(q.fn(spark, "/root/testdata/sf0.001").collect().nonEmpty, q.name)
+        assert(snapshot === before, q.name)
+        assert(spark.streams.active.isEmpty, q.name)
+      }
 
       // an unset checkpoint root stays unset
       spark.conf.unset("spark.sql.streaming.checkpointLocation")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.{Sessions, T}
+import graft.T
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the batch computation for those windows. */
 class WatermarkSpec extends AnyFunSuite {
 
-  private lazy val spark = Sessions.build("local[4]", 4)
+  private lazy val spark = graft.TestSession.spark
 
   test("append mode with watermark emits only finalized windows, equal to batch") {
     val dir = "/root/testdata/sf0.001"

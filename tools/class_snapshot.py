@@ -1,6 +1,7 @@
 """Class snapshot for the gates: a copy of target/scala-2.13/classes with
 tools/run.sh beside it, so a concurrent sbt compile cannot swap class
-files under the gate's JVMs.
+files under the gate's JVMs. Also the cores, heap and DuckDB sizes the
+gates run with on this machine (`machine`).
 
 tools/run.sh runs the classes of the tree it sits in
 (<root>/tools/run.sh -> <root>/target/scala-2.13/classes), so the
@@ -30,3 +31,24 @@ def snapshot_runner(root):
         raise SystemExit(f"[gate] no compiled graft.Verify under {root}/{CLASSES}"
                          " (run sbt compile first)")
     return runner
+
+
+def machine(duck_cap_gb=24):
+    """The sizes the gates give Spark and DuckDB on this machine:
+    cores = the CPUs this process may run on (nproc); heap = half of
+    MemTotal, at most 64g; duck_mem = half of MemTotal, at most
+    `duck_cap_gb` GB; duck_threads = min(16, cores). 32 cores and a
+    MemTotal of at least 128 GiB give 32, 64g, 24GB and 16."""
+    cores = len(os.sched_getaffinity(0))
+    with open("/proc/meminfo") as f:
+        kb = next(int(l.split()[1]) for l in f if l.startswith("MemTotal:"))
+    half_gb = max(1, kb // 2 // 2**20)
+    return {"cores": cores, "heap": f"{min(64, half_gb)}g",
+            "duck_mem": f"{min(duck_cap_gb, half_gb)}GB",
+            "duck_threads": min(16, cores)}
+
+
+def jvm_env():
+    """SPARK_DRIVER_MEM and SPARK_GRAFT_CPUS for a gate's JVMs."""
+    m = machine()
+    return {"SPARK_DRIVER_MEM": m["heap"], "SPARK_GRAFT_CPUS": str(m["cores"])}

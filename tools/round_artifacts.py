@@ -28,6 +28,7 @@ commit slipped in after a stamp, `--check` fails and `--delta` closes
 the gap without paying for a full skew re-run.
 """
 import json, os, subprocess, sys, tempfile
+from class_snapshot import machine
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TOOLS = os.path.join(REPO, "tools")
@@ -144,7 +145,7 @@ def delta():
         print("[round_artifacts] --delta: skew Verify FAILED")
         return 1
     part = os.path.join(TMP, "skew_delta.json")
-    env = dict(os.environ, GRAFT_DUCK_MEM=os.environ.get("GRAFT_DUCK_MEM", "24GB"))
+    env = dict(os.environ, GRAFT_DUCK_MEM=os.environ.get("GRAFT_DUCK_MEM", machine()["duck_mem"]))
     # crosscheck sees the FULL oracle_sql.json but only the filtered
     # queries' parquet — its exit code counts every unfiltered query as
     # "no spark result", so judge the gated queries' rows directly
@@ -190,7 +191,7 @@ def main():
     if r.returncode != 0:
         print("[round_artifacts] skew Verify FAILED")
         return 1
-    env = dict(os.environ, GRAFT_DUCK_MEM=os.environ.get("GRAFT_DUCK_MEM", "24GB"))
+    env = dict(os.environ, GRAFT_DUCK_MEM=os.environ.get("GRAFT_DUCK_MEM", machine()["duck_mem"]))
     r = sh([sys.executable, os.path.join(TOOLS, "crosscheck.py"), SKEW, out,
             os.path.join(REPO, SKEW_ART)], env=env)
 
@@ -223,7 +224,7 @@ def main():
     if "--sf1" in sys.argv:
         ref = sys.argv[sys.argv.index("--sf1") + 1]
         env2 = dict(os.environ, GRAFT_GATE_SF=os.path.join(TMP, "sf1"),
-                    GRAFT_DUCK_MEM=os.environ.get("GRAFT_DUCK_MEM", "24GB"))
+                    GRAFT_DUCK_MEM=os.environ.get("GRAFT_DUCK_MEM", machine()["duck_mem"]))
         r = sh([sys.executable, os.path.join(TOOLS, "changed_set.py"),
                 "--run", "--diff", ref], env=env2)
         stamp(manifest, "sf1_changed_set", ref=ref, gate_exit=r.returncode)

@@ -28,6 +28,7 @@ with `err` naming the method. Validated on /tmp/sf1 (where the direct
 replays are also runnable) before being trusted at sf10.
 """
 import duckdb, glob, json, os, sys, time
+from class_snapshot import machine
 
 CHECKS = {}
 
@@ -39,10 +40,11 @@ def check(name):
     return reg
 
 
-def connect(sf_dir, mem="24GB", threads=16):
+def connect(sf_dir, mem_cap_gb=24):
+    m = machine(mem_cap_gb)
     con = duckdb.connect()
-    con.execute(f"SET threads={threads}")
-    con.execute(f"SET memory_limit='{mem}'")
+    con.execute(f"SET threads={m['duck_threads']}")
+    con.execute(f"SET memory_limit='{m['duck_mem']}'")
     spill = f"/tmp/duck_sf10_checks_{os.getpid()}"
     con.execute(f"SET temp_directory='{spill}'")
     for t in ["region", "nation", "customer", "supplier", "part", "orders",
@@ -464,7 +466,7 @@ def q89(sf, out):
     work, tens of thousands of result rows at sf10 — and the engine's
     220 M-row parquet is filtered + hash-aggregated INSIDE DuckDB (the
     r13 failure was the pandas materialization)."""
-    con = connect(sf, mem="40GB")
+    con = connect(sf, mem_cap_gb=40)
     t = con.execute("SELECT (MAX(p_partkey) + 1) // 50 FROM part").fetchone()[0]
     con.execute(f"""CREATE OR REPLACE VIEW part AS
       SELECT * FROM read_parquet('{sf}/part.parquet') WHERE p_partkey < {t}""")
@@ -485,7 +487,7 @@ def q156(sf, out):
     """Staged replay: the verbatim oracle's iterations, materialized one
     at a time (a single recursive CTE held the whole 220 M-edge pipeline
     in temp; staged tables bound the working set to one join each)."""
-    con = connect(sf, mem="40GB")
+    con = connect(sf, mem_cap_gb=40)
     con.execute("""CREATE TABLE e AS
       WITH e0 AS (SELECT DISTINCT 2 * o_custkey AS src, 2 * l_partkey + 1 AS dst
                   FROM lineitem JOIN orders ON l_orderkey = o_orderkey)

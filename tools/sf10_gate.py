@@ -25,7 +25,7 @@ Run from the repo root. Uses a snapshot of target/scala-2.13/classes so
 a concurrent sbt compile can't swap class files under the JVMs.
 """
 import json, os, re, subprocess, sys, time
-from class_snapshot import snapshot_runner
+from class_snapshot import jvm_env, machine, snapshot_runner
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPOT_FILE = os.path.join(REPO, "tools", "sf10_spot.txt")
@@ -66,7 +66,7 @@ def main():
     log = "/tmp/sf10_gate.log"
     run = snapshot_runner("/tmp/graft_cls_gate")
     spot = open(SPOT_FILE).read().split()
-    env32 = {"SPARK_DRIVER_MEM": "64g", "SPARK_GRAFT_CPUS": "32"}
+    env_jvm = jvm_env()
 
     if "--regen" in args:
         # ONE MakeSf application per fixture (r17): STACKED applications
@@ -80,9 +80,9 @@ def main():
         # jaccard=0.0 pairs).
         # A single application keeps the salt inside the hashed prefix.
         assert sh(f"{run} graft.tools.MakeSf /root/testdata/sf0.1 {sf1} 10",
-                  env32, log) == 0
+                  env_jvm, log) == 0
         assert sh(f"{run} graft.tools.MakeSf /root/testdata/sf0.1 {sf10} 100",
-                  env32, log) == 0
+                  env_jvm, log) == 0
 
     if "--skip-verify" not in args:
         # chunk the spot list so one long query can't starve the rest of
@@ -90,12 +90,12 @@ def main():
         # resumable
         for i in range(0, len(spot), 8):
             chunk = ",".join(spot[i:i + 8])
-            sh(f"{run} graft.Verify {sf10} {out} {chunk}", env32, log)
-        sh(f"{run} graft.tools.DumpEdges101 {sf10} {out}", env32, log)
+            sh(f"{run} graft.Verify {sf10} {out} {chunk}", env_jvm, log)
+        sh(f"{run} graft.tools.DumpEdges101 {sf10} {out}", env_jvm, log)
 
     if "--skip-bench" not in args:
         qlist = " ".join(spot)
-        rc = sh(f"{run} graft.tools.TimeQ {sf10} 2 {qlist}", env32,
+        rc = sh(f"{run} graft.tools.TimeQ {sf10} 2 {qlist}", env_jvm,
                 "/tmp/sf10_gate_timeq.log")
         times = {}
         for line in open("/tmp/sf10_gate_timeq.log"):
@@ -121,7 +121,7 @@ def main():
               open(osql_path, "w"))
     cc_json = "/tmp/cc_sf10_gate.json"
     sh(f"python3 tools/crosscheck.py {sf10} {out} {cc_json}",
-       {"GRAFT_DUCK_MEM": "24GB"}, log)
+       {"GRAFT_DUCK_MEM": machine()["duck_mem"]}, log)
     json.dump(osql, open(osql_path, "w"), indent=0)  # restore for checks
     report = json.load(open(cc_json)) if os.path.exists(cc_json) else {}
     report = {q: r for q, r in report.items()

@@ -20,7 +20,7 @@ Exit non-zero if any row FAILS or asserts nothing.
 Usage: python3 tools/sf1_gate.py [--skip-verify] [--dirty-ok]
 """
 import json, os, subprocess, sys, time
-from class_snapshot import snapshot_runner
+from class_snapshot import jvm_env, machine, snapshot_runner
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TOOLS = os.path.join(REPO, "tools")
@@ -55,15 +55,15 @@ def main():
             return 2
 
     run = snapshot_runner("/tmp/graft_cls_sf1gate")
-    env32 = {"SPARK_DRIVER_MEM": "64g", "SPARK_GRAFT_CPUS": "32"}
+    env_jvm = jvm_env()
     if "--skip-verify" not in args:
-        if sh(f"{run} graft.Verify {SF1} {OUT}", env32) != 0:
+        if sh(f"{run} graft.Verify {SF1} {OUT}", env_jvm) != 0:
             print("[sf1_gate] Verify FAILED — see", LOG)
             return 1
 
     cc_json = "/tmp/cc_sf1.json"
     sh(f"python3 tools/crosscheck.py {SF1} {OUT} {cc_json}",
-       {"GRAFT_DUCK_MEM": "24GB",
+       {"GRAFT_DUCK_MEM": machine()["duck_mem"],
         "GRAFT_DUCK_TIMEOUT": os.environ.get("GRAFT_DUCK_TIMEOUT", "900")})
     report = json.load(open(cc_json))
 

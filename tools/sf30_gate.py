@@ -27,7 +27,7 @@ Usage: python3 tools/sf30_gate.py [--skip-verify] [--skip-bench]
                                   [--sf30 /tmp/sf30]
 """
 import json, os, re, subprocess, sys, time
-from class_snapshot import snapshot_runner
+from class_snapshot import jvm_env, machine, snapshot_runner
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SPOT = ["q101_dedup_pipeline", "q135_incremental_dedup", "q156_pagerank",
@@ -59,16 +59,16 @@ def main():
     out = "/tmp/ver_sf30_gate"
     log = "/tmp/sf30_gate.log"
     run = snapshot_runner("/tmp/graft_cls_gate30")
-    env32 = {"SPARK_DRIVER_MEM": "64g", "SPARK_GRAFT_CPUS": "32"}
+    env_jvm = jvm_env()
 
     if "--skip-verify" not in args:
-        sh(f"{run} graft.Verify {sf30} {out} {','.join(SPOT)}", env32, log)
-        sh(f"{run} graft.tools.DumpEdges101 {sf30} {out}", env32, log)
+        sh(f"{run} graft.Verify {sf30} {out} {','.join(SPOT)}", env_jvm, log)
+        sh(f"{run} graft.tools.DumpEdges101 {sf30} {out}", env_jvm, log)
 
     if "--skip-bench" not in args:
         tq_log = "/tmp/sf30_gate_timeq.log"
         open(tq_log, "w").close()
-        sh(f"{run} graft.tools.TimeQ {sf30} 2 {' '.join(SPOT)}", env32, tq_log)
+        sh(f"{run} graft.tools.TimeQ {sf30} 2 {' '.join(SPOT)}", env_jvm, tq_log)
         times = {}
         for line in open(tq_log):
             m = re.match(r"\[timeq\] rep\d+ (\S+): ([0-9.]+) s", line)
@@ -97,7 +97,7 @@ def main():
               open(osql_path, "w"))
     cc_json = "/tmp/cc_sf30_gate.json"
     sh(f"python3 tools/crosscheck.py {sf30} {out} {cc_json}",
-       {"GRAFT_DUCK_MEM": "24GB"}, log)
+       {"GRAFT_DUCK_MEM": machine()["duck_mem"]}, log)
     json.dump(osql, open(osql_path, "w"), indent=0)  # restore for checks
     report = json.load(open(cc_json)) if os.path.exists(cc_json) else {}
     report = {q: r for q, r in report.items() if q in SPOT}
